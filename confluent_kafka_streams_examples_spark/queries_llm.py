@@ -698,7 +698,7 @@ def dedup_incremental_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     if n_parts > 1:
         corpus_sig_df = corpus_sig_df.repartition(n_parts)
     corpus_sig_df.write.mode("overwrite").parquet(sig_path)
-    corpus_sig = spark.read.parquet(sig_path)
+    corpus_sig = spark.read.schema(corpus_sig_df.schema).parquet(sig_path)
     return dedup.incremental_minhash_pairs(
         docs.filter(is_new), corpus_sig, "doc_id", "text",
         num_hashes=_MH, bands=_BANDS,

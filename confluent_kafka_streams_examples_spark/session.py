@@ -106,17 +106,18 @@ def _resolved_schema(spark: SparkSession, path: str, stamp_path: str | None = No
     own mtime is touched on every read-refresh.  Only the SCHEMA is
     cached, never a DataFrame handle: every call still builds a fresh
     relation with fresh attribute ids, so self-joins of two load_table
-    calls resolve exactly as before."""
+    calls resolve exactly as before.  When the stamp file cannot be
+    stat'ed there is no version to key on, so the schema is inferred
+    and not cached."""
     try:
         st = os.stat(stamp_path if stamp_path is not None else path)
-        stamp = (st.st_mtime_ns, st.st_size)
     except OSError:
-        stamp = None
+        return spark.read.parquet(path).schema
     cache = getattr(spark, "_ckse_schema_cache", None)
     if cache is None:
         cache = {}
         spark._ckse_schema_cache = cache
-    key = (path, stamp)
+    key = (path, (st.st_mtime_ns, st.st_size))
     schema = cache.get(key)
     if schema is None:
         schema = spark.read.parquet(path).schema

@@ -10,10 +10,11 @@ Reference policies:
 
 Spark mapping: the serde boundary yields null on parse failure
 (functions.json_serde); this module adds the *counted* dead-letter policy
-via foreachBatch — bad rows are counted (Spark accumulator: cluster-wide,
-lock-free) and optionally persisted to a dead-letter sink; crossing the
-threshold raises, failing the query exactly like the reference's
-FAIL-after-N.
+via foreachBatch — each batch's bad rows are counted by one extra
+``count()`` job and added to a driver-side total, and optionally
+persisted to a dead-letter sink; crossing the threshold raises, failing
+the query exactly like the reference's FAIL-after-N.  The total lives on
+the policy object, so it restarts from zero with a new driver process.
 """
 
 from __future__ import annotations
@@ -68,8 +69,9 @@ class DeadLetterPolicy:
     """Counted skip-then-fail policy for a JSON-parsed stream.
 
     Use with foreachBatch: ``policy.process(batch_df)`` splits the batch
-    at the serde boundary, accumulates the malformed count, raises past
-    ``max_errors``, and returns the good rows.
+    at the serde boundary, counts the malformed rows with a ``count()``
+    job on the batch, adds them to ``errors_seen`` on the driver, raises
+    past ``max_errors``, and returns the good rows.
     """
 
     value_col: str

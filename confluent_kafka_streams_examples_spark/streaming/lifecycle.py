@@ -47,7 +47,7 @@ class StreamApp:
 
     def await_termination(self, timeout: float | None = None) -> bool:
         """Await with restart-on-transient (E3).  Returns True when the
-        query ended (or timed out in a healthy state)."""
+        query ended, False when ``timeout`` elapsed first."""
         assert self.query is not None, "call start() first"
         deadline = None if timeout is None else time.monotonic() + timeout
         while True:
@@ -56,8 +56,7 @@ class StreamApp:
                 if remaining is None:
                     self.query.awaitTermination()
                     return True
-                finished = self.query.awaitTermination(remaining)
-                return finished or True
+                return self.query.awaitTermination(remaining)
             except Exception as exc:  # StreamingQueryException
                 if is_transient(exc) and self.restarts < self.max_restarts:
                     # REPLACE_THREAD: rebuild the query; checkpoint resumes

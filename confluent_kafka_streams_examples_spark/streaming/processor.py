@@ -5,10 +5,22 @@ total in a persistent KeyValueStore (process(): read store, add price,
 put back — :60-67) and a *punctuator* that every 10s of stream time
 scans the store and forwards every (key, total) downstream (:43-58).
 
-Spark twin: ``applyInPandasWithState`` — the state store replaces the
-KeyValueStore (checkpointed, per-key, partition-parallel), and emission
-happens when a micro-batch touches a key (update semantics) or when the
-configured timeout fires (punctuate semantics).
+Spark twin: the state store replaces the KeyValueStore (checkpointed,
+per-key, partition-parallel), and emission happens when a micro-batch
+touches a key (update semantics) or when the configured timeout fires
+(punctuate semantics).  Without a punctuator the fold is only ``sum``
+and ``count`` per key, so it runs as a JVM streaming aggregate
+(``groupBy().agg()`` in update mode — no Python worker, no Arrow round
+trip).  A processing-time ``GroupState`` timeout is the only way to
+punctuate, so with ``emit_every_ms`` set the fold is a per-key
+``applyInPandasWithState`` function.
+
+The two paths keep different state (the aggregate's sum/count buffers
+vs the fold's ``GroupState`` row), so a checkpoint cannot move between
+them: Spark rejects it at state load
+(``STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA``).  That holds
+for a checkpoint written by the Python fold before the timer-free path
+became an aggregate, too — resume it from a fresh checkpoint.
 
 Documented mapping (SURVEY §7 M5): Kafka Streams punctuates on *stream
 time advance*; Spark fires ``GroupStateTimeout`` when the watermark (event
@@ -58,11 +70,16 @@ def running_total_with_emission(
     """Per-key running sum with optional periodic re-emission.
 
     - Each micro-batch: fold new rows into state, emit updated totals
-      (A2/A3 continuous-refinement semantics).
+      (A2/A3 continuous-refinement semantics).  Without a punctuator
+      this is a JVM streaming aggregate; ``total`` skips null and NaN
+      values (0.0 when a key has no other), ``n`` counts every row.
     - ``emit_every_ms``: also re-emit every key's current total on a
-      processing-time timeout — the punctuator (A4) analog.
+      processing-time timeout — the punctuator (A4) analog, run as a
+      per-key ``applyInPandasWithState`` fold.
 
-    Returns an update-mode streaming DataFrame (key, total, n).
+    Returns an update-mode streaming DataFrame (key string, total
+    double, n long).  Switching ``emit_every_ms`` between None and set
+    needs a fresh checkpoint (see the module docstring).
 
     Null-key records are DROPPED before the fold — the reference
     semantics: Kafka Streams' groupByKey discards null-key records
@@ -78,6 +95,14 @@ def running_total_with_emission(
     (see tests/test_examples.py::test_processor_pipeline_punctuate_reemission).
     """
     stream = stream.filter(F.col(key_col).isNotNull())
+    if emit_every_ms is None:
+        # pandas Series.sum() semantics: null and NaN are skipped, and a
+        # key whose values are all null/NaN totals 0.0; n counts every row
+        v = F.col(value_col).cast("double")
+        return stream.groupBy(F.col(key_col).cast("string").alias("key")).agg(
+            F.coalesce(F.sum(F.when(~F.isnan(v), v)), F.lit(0.0)).alias("total"),
+            F.count(F.lit(1)).alias("n"),
+        )
 
     def fold(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -93,31 +118,26 @@ def running_total_with_emission(
                 total += float(pdf[value_col].sum())
                 n += int(len(pdf))
         state.update((total, n))
-        if emit_every_ms is not None:
-            state.setTimeoutDuration(emit_every_ms)
-        if saw_data or (state.hasTimedOut if emit_every_ms is not None else False):
+        state.setTimeoutDuration(emit_every_ms)
+        if saw_data or state.hasTimedOut:
             yield pd.DataFrame({"key": [str(key[0])], "total": [total], "n": [n]})
 
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if emit_every_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
     return stream.groupBy(key_col).applyInPandasWithState(
         fold,
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="update",
-        timeoutConf=timeout,
+        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
     )
 
 
 # ---------------------------------------------------------------------------
 # Bucketed variant — the high-key-cardinality fast path (VERDICT r8 #1).
 #
-# Per-key grouping pays one Python fold invocation per touched key per
-# micro-batch (~2 ms of pandas + marshalling each): the measured
-# 32k -> 11k rows/s cliff from 10k to 1M keys (SCALE.md state decades).
+# A per-key Python fold (the punctuator path above) pays one invocation
+# per touched key per micro-batch (~2 ms of pandas + marshalling each):
+# the measured 32k -> 11k rows/s cliff from 10k to 1M keys (SCALE.md
+# state decades).
 # Here the state key is pmod(xxhash64(key), n_buckets) and the state
 # value is ONE pickled dict {key: (total, n)} for every key in the
 # bucket, so the per-call overhead amortizes across all of them and

@@ -466,3 +466,19 @@ def test_materialized_write_parallelism_tracks_est_bytes(tmp_path, spark):
         est_bytes=3 * TARGET_FILE_BYTES,
     )
     assert len(parquet_files(big)) == 4
+
+
+def test_schema_not_cached_without_stamp(spark, tmp_path):
+    """A stamp file that cannot be stat'ed gives no version to key the
+    schema cache on: a table regenerated with a different schema behind
+    it must read with its new schema, not the first one inferred."""
+    from confluent_kafka_streams_examples_spark.session import _resolved_schema
+
+    path = str(tmp_path / "t.parquet")
+    missing = str(tmp_path / "no_such_manifest")
+    spark.range(3).selectExpr("id AS a").write.parquet(path)
+    assert _resolved_schema(spark, path, stamp_path=missing).names == ["a"]
+    spark.range(3).selectExpr("id AS b", "id AS c").write.mode(
+        "overwrite"
+    ).parquet(path)
+    assert _resolved_schema(spark, path, stamp_path=missing).names == ["b", "c"]

@@ -246,6 +246,103 @@ def test_running_total_across_batches(spark, tmp_path):
     assert [(r["total"], r["n"]) for r in rows] == [(3.0, 2), (7.0, 3)]
 
 
+def test_running_total_aggregate_matches_fold_semantics(spark, tmp_path):
+    """The timer-free running total is a JVM streaming aggregate with
+    the fold's semantics: null keys dropped, an integer key emitted as
+    a string, ``n`` counting null/NaN values that ``total`` skips (an
+    all-null key totals 0.0), refined across micro-batches.  The
+    punctuator path is still the applyInPandasWithState fold."""
+    from confluent_kafka_streams_examples_spark.plans.describe import explain_str
+
+    schema = StructType(
+        [StructField("key", LongType()), StructField("value", DoubleType())]
+    )
+    nan = float("nan")
+    src = str(tmp_path / "src")
+
+    def write(rows):
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+
+    write([(1, 1.0), (1, None), (1, nan), (2, None), (None, 5.0)])
+    stream = spark.readStream.schema(schema).parquet(src)
+    totals = running_total_with_emission(stream, "key", "value")
+    assert [(f.name, f.dataType) for f in totals.schema] == [
+        ("key", StringType()),
+        ("total", DoubleType()),
+        ("n", LongType()),
+    ]
+    assert "FlatMapGroupsInPandasWithState" not in explain_str(totals)
+    punctuated = running_total_with_emission(
+        stream, "key", "value", emit_every_ms=1000
+    )
+    assert "FlatMapGroupsInPandasWithState" in explain_str(punctuated)
+
+    qname = f"t{uuid.uuid4().hex[:8]}"
+    q = (
+        totals.writeStream.format("memory")
+        .queryName(qname)
+        .outputMode("update")
+        .option("checkpointLocation", f"{tmp_path}/ckpt_{qname}")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        write([(1, 2.0), (3, nan), (None, 7.0)])
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    rows = spark.sql(f"SELECT * FROM {qname} ORDER BY key, n").collect()
+    assert [(r["key"], r["total"], r["n"]) for r in rows] == [
+        ("1", 1.0, 3),
+        ("1", 3.0, 4),
+        ("2", 0.0, 1),
+        ("3", 0.0, 1),
+    ]
+
+
+def test_running_total_path_switch_needs_fresh_checkpoint(spark, tmp_path):
+    """The timer-free aggregate and the punctuator fold keep different
+    state, so turning emit_every_ms on over an aggregate checkpoint
+    fails loudly at state load instead of folding from a misread
+    state row (documented on the module)."""
+    import time as _time
+
+    src = str(tmp_path / "src")
+    ckpt = f"{tmp_path}/ckpt"
+    write_batch(spark, src, [("a", 1.0, ts(0))])
+
+    def start(emit_every_ms):
+        stream = spark.readStream.schema(EVENT_SCHEMA).parquet(src)
+        return (
+            running_total_with_emission(stream, "key", "value", emit_every_ms)
+            .writeStream.foreachBatch(lambda df, epoch: df.collect())
+            .outputMode("update")
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+
+    q = start(None)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    write_batch(spark, src, [("a", 2.0, ts(1))])
+    q2 = start(100)
+    exc = None
+    try:
+        deadline = _time.monotonic() + 60
+        while exc is None and q2.isActive and _time.monotonic() < deadline:
+            _time.sleep(0.5)
+            exc = q2.exception()
+        exc = exc or q2.exception()
+    finally:
+        q2.stop()
+    assert exc is not None, "switching paths over one checkpoint must fail"
+    assert "STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA" in str(exc), str(exc)
+
+
 def test_dead_letter_policy(spark):
     """E1/E4 (reference ErrorHandlingExample.scala:32-47 + circe
     drop-on-failure): poison records skipped + counted; threshold fails."""
@@ -301,6 +398,21 @@ def test_lifecycle_restart_on_transient():
 
     assert is_transient(RuntimeError("Transient error")) is True
     assert is_transient(RuntimeError("fatal")) is False
+
+
+def test_lifecycle_await_timeout_returns_false():
+    """A timeout is not termination: await_termination reports False
+    when the query's own awaitTermination(t) timed out."""
+
+    class RunningQuery:
+        isActive = True
+
+        def awaitTermination(self, timeout=None):
+            return False
+
+    app = StreamApp(RunningQuery).start()
+    assert app.await_termination(timeout=0.01) is False
+    assert app.restarts == 0
 
 
 def test_windowed_join_subsecond_precision(spark, tmp_path):
