@@ -899,13 +899,13 @@ def minhash_estimate_pairs(
         .select("id_a", "id_b")
         .distinct()
     )
-    sa = sig.selectExpr(
-        f"{id_col} as id_a",
-        *[f"mh{j} as a{j}" for j in range(num_hashes)],
+    sa = sig.select(
+        F.col(id_col).alias("id_a"),
+        *[F.col(f"mh{j}").alias(f"a{j}") for j in range(num_hashes)],
     )
-    sb = sig.selectExpr(
-        f"{id_col} as id_b",
-        *[f"mh{j} as b{j}" for j in range(num_hashes)],
+    sb = sig.select(
+        F.col(id_col).alias("id_b"),
+        *[F.col(f"mh{j}").alias(f"b{j}") for j in range(num_hashes)],
     )
     match_terms = " + ".join(
         f"(CASE WHEN a{j} = b{j} THEN 1 ELSE 0 END)" for j in range(num_hashes)

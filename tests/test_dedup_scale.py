@@ -172,6 +172,23 @@ def test_minhash_estimate_identical_docs(spark):
     assert got == {(1, 2): (16, 1.0)}
 
 
+def test_minhash_estimate_takes_id_column_needing_quotes(spark):
+    """The caller's id column is referenced as a column, not spliced
+    into a SQL string: a name with a space must work."""
+    text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    df = spark.createDataFrame(
+        [(1, text), (2, text), (3, "totally different words here")],
+        ["doc id", "text"],
+    )
+    got = [
+        tuple(r)
+        for r in dedup.minhash_estimate_pairs(
+            df, "doc id", "text", min_matching=8
+        ).collect()
+    ]
+    assert got == [(1, 2, 16, 1.0)]
+
+
 def test_incremental_pairs_never_pair_old_with_old(spark):
     text = "one two three four five six seven eight nine ten eleven twelve"
     corpus = _docs(spark, [(1, text), (2, text), (3, "other corpus content entirely distinct")])

@@ -302,6 +302,19 @@ def test_running_total_aggregate_matches_fold_semantics(spark, tmp_path):
     ]
 
 
+def test_checkpoint_manager_is_filesystem_based(spark, tmp_path):
+    """Checkpoints go through Hadoop's FileSystem API: the default
+    FileContext manager forks a ``readlink`` process per rename and
+    existence check on a host without native libhadoop (see the
+    session module docstring)."""
+    jvm = spark._jvm
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert manager.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
+
+
 def test_running_total_path_switch_needs_fresh_checkpoint(spark, tmp_path):
     """The timer-free aggregate and the punctuator fold keep different
     state, so turning emit_every_ms on over an aggregate checkpoint

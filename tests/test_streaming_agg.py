@@ -261,6 +261,82 @@ def test_idempotent_sink_end_to_end_stream(spark, tmp_path):
     assert second == first
 
 
+def test_stateful_replay_after_crash_between_sink_and_commit(spark, tmp_path):
+    """A crash after the sink wrote epoch N but before ``commits/N``
+    landed: the restart re-runs epoch N from its offset log and the
+    state of epoch N-1, rewrites the same rows in place (overwriting
+    the epoch's state delta and log files), and later epochs keep
+    folding from the right totals."""
+    import os
+
+    from confluent_kafka_streams_examples_spark.streaming.processor import (
+        running_total_with_emission,
+    )
+    from confluent_kafka_streams_examples_spark.streaming.sinks import (
+        idempotent_parquet_sink,
+    )
+
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+    batches = [
+        [("a", 1.0, ts(0)), ("b", 2.0, ts(1))],
+        [("a", 3.0, ts(2)), ("c", 4.0, ts(3))],
+        [("a", 5.0, ts(4)), ("b", 6.0, ts(5))],
+    ]
+    epochs: list[int] = []
+    sink = idempotent_parquet_sink(out)
+
+    def recording_sink(df, epoch_id):
+        epochs.append(epoch_id)
+        sink(df, epoch_id)
+
+    def start():
+        stream = spark.readStream.schema(EVENT_SCHEMA).parquet(src)
+        return (
+            running_total_with_emission(stream, "key", "value")
+            .writeStream.foreachBatch(recording_sink)
+            .outputMode("update")
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+
+    def epoch_rows(n):
+        return sorted(map(tuple, spark.read.parquet(f"{out}/batch_id={n}").collect()))
+
+    write_batch(spark, src, batches[0])
+    q = start()
+    try:
+        q.processAllAvailable()
+        write_batch(spark, src, batches[1])
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert epochs == [0, 1]
+    before = epoch_rows(1)
+    assert before == [("a", 4.0, 2), ("c", 4.0, 1)]
+
+    # the crash: the sink wrote epoch 1, its commit never landed
+    os.remove(f"{ckpt}/commits/1")
+    os.remove(f"{ckpt}/commits/.1.crc")
+    q = start()
+    try:
+        q.processAllAvailable()
+        assert epochs == [0, 1, 1], "epoch 1 must be re-run, once"
+        assert os.path.exists(f"{ckpt}/commits/1")
+        assert epoch_rows(1) == before
+        write_batch(spark, src, batches[2])
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert epochs == [0, 1, 1, 2]
+
+    out_rows = spark.read.parquet(out).orderBy("batch_id").collect()
+    last = {r["key"]: r["total"] for r in out_rows}
+    sums: dict[str, float] = {}
+    for k, v, _ in (row for rows in batches for row in rows):
+        sums[k] = sums.get(k, 0.0) + v
+    assert last == sums
+
+
 def test_hll_registers_stream_matches_batch(spark, tmp_path):
     """The portable-HLL register build runs UNCHANGED on a stream:
     groupBy(grp, j).max(rho) is a built-in streaming aggregate, so
