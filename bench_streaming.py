@@ -220,8 +220,8 @@ def _p_session(spark, left, right):
 
 
 def _p_funnel(spark, left, right):
-    # per-user stage-machine fold (applyInPandasWithState, 3 longs of
-    # state per user): the bench stream maps to funnel columns — user
+    # conservative funnel fold (packed per-bucket user vector, numpy
+    # min-cascade): the bench stream maps to funnel columns — user
     # from the key suffix, event_type cycling view/click/purchase
     from confluent_kafka_streams_examples_spark.streaming.funnel import (
         bench_stream_to_funnel_columns,
@@ -232,30 +232,16 @@ def _p_funnel(spark, left, right):
     return funnel_stage_stream(src), "update"
 
 
-def _p_funnel_bucketed(spark, left, right):
-    # bucketed-state twin (packed per-bucket user vector, numpy
-    # min-cascade): the high-key-cardinality fast path whose decades
-    # scripts/stream_state_probe.py measures; tracked here too so the
-    # fixed 10k-key bench catches regressions in the vectorized fold
-    from confluent_kafka_streams_examples_spark.streaming.funnel import (
-        bench_stream_to_funnel_columns,
-        funnel_stage_stream_bucketed,
-    )
-
-    src = bench_stream_to_funnel_columns(_read(spark, left))
-    return funnel_stage_stream_bucketed(src), "update"
-
-
 def _p_total_punctuated(spark, left, right):
-    # bucketed punctuator (A4 at high K): per-key next-fire times in
-    # the bucket blob, one bucket timer, due keys re-emit per trigger —
-    # tracked so punctuate-path regressions surface round-to-round
+    # punctuator (A4): per-key next-fire times in the bucket blob, one
+    # bucket timer, due keys re-emit per trigger — tracked so
+    # punctuate-path regressions surface round-to-round
     from confluent_kafka_streams_examples_spark.streaming.processor import (
-        running_total_bucketed,
+        running_total_with_emission,
     )
 
     return (
-        running_total_bucketed(
+        running_total_with_emission(
             _read(spark, left), "key", "value", emit_every_ms=2000
         ),
         "update",
@@ -357,7 +343,6 @@ PIPELINES = [
     ("tumbling_agg", _p_tumbling, N_ROWS),
     ("session_agg", _p_session, N_ROWS),
     ("funnel_stages", _p_funnel, N_ROWS),
-    ("funnel_bucketed", _p_funnel_bucketed, N_ROWS),
     ("running_total_punctuated", _p_total_punctuated, N_ROWS),
     ("neardup_candidates", _p_neardup, N_ROWS),
     ("neardup_corpus_gate", _p_neardup_corpus, N_ROWS),

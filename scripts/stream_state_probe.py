@@ -123,52 +123,24 @@ def _p_dedup(spark, path):
     )
 
 
-def _p_funnel(spark, path):
-    # stage-machine state: 3 longs per user — the same keyed-state
-    # class as running_total but with branchy per-batch logic; the
-    # probe asks whether the state machine changes the K-scaling story
-    from confluent_kafka_streams_examples_spark.streaming.funnel import (
-        bench_stream_to_funnel_columns,
-        funnel_stage_stream,
-    )
-
-    src = bench_stream_to_funnel_columns(_read(spark, path))
-    return funnel_stage_stream(src), "update"
-
-
 def _buckets_for(n_keys: int) -> int:
     # the SCALE.md sizing rule: n_buckets ~ keys/1000 keeps each bucket
     # blob at a rewrite-friendly ~32-60 KB while staying >> core count
     return max(1024, n_keys // 1000)
 
 
-def _p_total_bucketed(spark, path, n_keys=BASE_KEYS):
-    # bucketed-state twin (VERDICT r8 #1): same (key, total, n) output,
-    # state key = hash bucket, one pickled {key: (total, n)} map per
-    # bucket — Python calls per batch bounded by n_buckets, not K
-    from confluent_kafka_streams_examples_spark.streaming.processor import (
-        running_total_bucketed,
-    )
-
-    return (
-        running_total_bucketed(
-            _read(spark, path), "key", "value", n_buckets=_buckets_for(n_keys)
-        ),
-        "update",
-    )
-
-
-def _p_funnel_bucketed(spark, path, n_keys=BASE_KEYS):
-    # bucketed-state twin of funnel_stages: packed (user,t1,t2,t3)
-    # vector per bucket, numpy min-cascade across the whole bucket
+def _p_funnel(spark, path, n_keys=BASE_KEYS):
+    # stage-machine state: 3 longs per user, packed per hash bucket
+    # with a numpy min-cascade across the bucket — the probe asks
+    # whether the state machine changes the K-scaling story
     from confluent_kafka_streams_examples_spark.streaming.funnel import (
         bench_stream_to_funnel_columns,
-        funnel_stage_stream_bucketed,
+        funnel_stage_stream,
     )
 
     src = bench_stream_to_funnel_columns(_read(spark, path))
     return (
-        funnel_stage_stream_bucketed(src, n_buckets=_buckets_for(n_keys)),
+        funnel_stage_stream(src, n_buckets=_buckets_for(n_keys)),
         "update",
     )
 
@@ -202,18 +174,18 @@ def _p_total_punctuated(spark, path, n_keys=BASE_KEYS):
     # 2 s cadence is far shorter than the drain, so several punctuate
     # rounds fire DURING ingestion and their cost lands inside the
     # measured per-batch durations — the probe asks whether that cost
-    # bends with K the way the per-key punctuator's Python floor did.
+    # bends with K.
     from confluent_kafka_streams_examples_spark.streaming.processor import (
-        running_total_bucketed,
+        running_total_with_emission,
     )
 
     return (
-        running_total_bucketed(
+        running_total_with_emission(
             _read(spark, path),
             "key",
             "value",
-            n_buckets=_buckets_for(n_keys),
             emit_every_ms=2000,
+            n_buckets=_buckets_for(n_keys),
         ),
         "update",
     )
@@ -222,11 +194,9 @@ def _p_total_punctuated(spark, path, n_keys=BASE_KEYS):
 PILLARS = [
     ("latest_per_key", _p_latest),
     ("running_total", _p_total),
-    ("running_total_bucketed", _p_total_bucketed),
     ("running_total_punctuated", _p_total_punctuated),
     ("dedup_watermark", _p_dedup),
     ("funnel_stages", _p_funnel),
-    ("funnel_bucketed", _p_funnel_bucketed),
     ("funnel_exact", _p_funnel_exact),
 ]
 

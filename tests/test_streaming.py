@@ -600,27 +600,42 @@ def test_state_probe_pillars_construct(spark, tmp_path):
         assert mode in ("append", "update"), (name, mode)
 
 
-def test_running_total_bucketed_matches_per_key(spark, tmp_path):
-    """Bucketed-state running total (streaming/processor.py, the
-    high-cardinality fast path): identical (key, total, n) results to
-    the per-key fold across multi-batch refinement, with keys spread
-    over many buckets — plus the pickled bucket map must survive the
-    state-store round trip between batches.  Null-key rows are mixed
-    in and must be DROPPED (the groupByKey null-drop guard both
-    variants share — ADVICE r9), not folded or emitted as 'None'."""
-    from confluent_kafka_streams_examples_spark.streaming.processor import (
-        running_total_bucketed,
-    )
+def _poll_memory(spark, qname, cond, seconds):
+    """Collect the memory sink until ``cond(rows)`` holds or the
+    deadline passes: with an armed processing-time timeout,
+    processAllAvailable never settles."""
+    import time as _time
 
+    deadline = _time.monotonic() + seconds
+    while _time.monotonic() < deadline:
+        rows = spark.sql(f"SELECT * FROM {qname}").collect()
+        if cond(rows):
+            return rows
+        _time.sleep(0.5)
+    return spark.sql(f"SELECT * FROM {qname}").collect()
+
+
+def test_running_total_punctuated_matches_aggregate_semantics(spark, tmp_path):
+    """The punctuator fold (bucketed state) keeps the aggregate's value
+    semantics across multi-batch refinement, with keys spread over many
+    buckets and the pickled bucket map round-tripping the state store
+    between batches: ``total`` skips NaN and null values, an all-null
+    key totals 0.0, ``n`` counts every row, and null-key rows are
+    DROPPED (the groupByKey null-drop guard — ADVICE r9), not folded or
+    emitted as 'None'."""
+    nan = float("nan")
     src = str(tmp_path / "src")
     rows = []
     for k in range(40):
         for i in range(3):
             rows.append((f"id-{k}", float(k + 1) + i, ts(i)))
     rows += [(None, 999.0, ts(1)), (None, 1.0, ts(2))]
+    rows += [("id-7", nan, ts(1)), ("nulls", None, ts(1)), ("nulls", nan, ts(2))]
     write_batch(spark, src, rows)
     stream = spark.readStream.schema(EVENT_SCHEMA).parquet(src)
-    totals = running_total_bucketed(stream, "key", "value", n_buckets=8)
+    totals = running_total_with_emission(
+        stream, "key", "value", emit_every_ms=100, n_buckets=8
+    )
     qname = f"tb{uuid.uuid4().hex[:8]}"
     q = (
         totals.writeStream.format("memory")
@@ -629,25 +644,37 @@ def test_running_total_bucketed_matches_per_key(spark, tmp_path):
         .option("checkpointLocation", f"{tmp_path}/ckpt_{qname}")
         .start()
     )
-    try:
-        q.processAllAvailable()
-        # second batch folds into recovered bucket state
-        write_batch(spark, src, [("id-0", 100.0, ts(9)), ("id-39", 1.0, ts(9))])
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    out = spark.sql(f"SELECT * FROM {qname}").collect()
-    final = {}
-    for r in out:
-        prev = final.get(r["key"])
-        if prev is None or r["n"] > prev[1]:
-            final[r["key"]] = (r["total"], r["n"])
+
+    def final(out):
+        # punctuated re-emissions repeat a key's current values, so the
+        # largest n is the latest state
+        got = {}
+        for r in out:
+            prev = got.get(r["key"])
+            if prev is None or r["n"] > prev[1]:
+                got[r["key"]] = (r["total"], r["n"])
+        return got
+
     expect = {
         f"id-{k}": (float((k + 1) * 3 + 3), 3) for k in range(40)
     }
-    expect["id-0"] = (expect["id-0"][0] + 100.0, 4)
-    expect["id-39"] = (expect["id-39"][0] + 1.0, 4)
-    assert final == expect  # no 'None'/null key row, nulls not folded
+    expect["id-7"] = (expect["id-7"][0], 4)
+    expect["nulls"] = (0.0, 2)
+    try:
+        _poll_memory(spark, qname, lambda out: len(final(out)) >= 41, 60)
+        # second batch folds into recovered bucket state
+        write_batch(
+            spark,
+            src,
+            [("id-0", 100.0, ts(9)), ("id-39", 1.0, ts(9)), ("id-5", None, ts(9))],
+        )
+        expect["id-0"] = (expect["id-0"][0] + 100.0, 4)
+        expect["id-39"] = (expect["id-39"][0] + 1.0, 4)
+        expect["id-5"] = (expect["id-5"][0], 4)
+        out = _poll_memory(spark, qname, lambda out: final(out) == expect, 60)
+    finally:
+        q.stop()
+    assert final(out) == expect  # no 'None'/null key row, nulls not folded
 
 
 def test_windowed_join_random_stream_matches_batch(spark, tmp_path):
@@ -770,25 +797,18 @@ def test_latest_per_key_random_stream_matches_batch(spark, tmp_path):
 
 
 def test_running_total_bucketed_punctuator_per_key_cadence(spark, tmp_path):
-    """The bucketed punctuator (A4 at high key cardinality): with
-    emit_every_ms set, a key re-emits its CURRENT total on timeout even
-    when later batches carry no rows for it — the same contract as the
-    per-key punctuator (reference ProcessorApiExample.scala:43-58) —
+    """The punctuator (A4) on bucketed state: with emit_every_ms set, a
+    key re-emits its CURRENT total on timeout even when later batches
+    carry no rows for it (reference ProcessorApiExample.scala:43-58) —
     and only DUE keys re-emit, not whole buckets: a key that just
     received data is re-armed, not double-emitted."""
-    import time as _time
-
-    from confluent_kafka_streams_examples_spark.streaming.processor import (
-        running_total_bucketed,
-    )
-
     src = str(tmp_path / "src")
     write_batch(spark, src, [("a", 5.0, ts(0)), ("c", 2.0, ts(0))])
     stream = spark.readStream.schema(EVENT_SCHEMA).parquet(src)
     # n_buckets=1: 'a' and 'c' share one bucket and ONE bucket timer,
     # yet must keep independent per-key cadence
-    totals = running_total_bucketed(
-        stream, "key", "value", n_buckets=1, emit_every_ms=100
+    totals = running_total_with_emission(
+        stream, "key", "value", emit_every_ms=100, n_buckets=1
     )
     qname = f"bp{uuid.uuid4().hex[:8]}"
     q = (
@@ -799,21 +819,16 @@ def test_running_total_bucketed_punctuator_per_key_cadence(spark, tmp_path):
         .start()
     )
 
-    def poll(cond, seconds):
-        deadline = _time.monotonic() + seconds
-        while _time.monotonic() < deadline:
-            rows = spark.sql(f"SELECT * FROM {qname}").collect()
-            if cond(rows):
-                return rows
-            _time.sleep(0.5)
-        return spark.sql(f"SELECT * FROM {qname}").collect()
-
     rows = []
     try:
-        rows = poll(lambda rs: any(r["key"] == "a" for r in rs), 60)
+        rows = _poll_memory(
+            spark, qname, lambda rs: any(r["key"] == "a" for r in rs), 60
+        )
         # data only for key b: a and c must re-emit via the bucket timer
         write_batch(spark, src, [("b", 7.0, ts(1))])
-        rows = poll(
+        rows = _poll_memory(
+            spark,
+            qname,
             lambda rs: len([r for r in rs if r["key"] == "a"]) >= 2
             and len([r for r in rs if r["key"] == "c"]) >= 2,
             60,
@@ -827,80 +842,6 @@ def test_running_total_bucketed_punctuator_per_key_cadence(spark, tmp_path):
     assert all(r["total"] == 5.0 and r["n"] == 1 for r in emits_a)
     assert all(r["total"] == 2.0 and r["n"] == 1 for r in emits_c)
     assert all(r["total"] == 7.0 for r in rows if r["key"] == "b")
-
-
-def test_bucketed_punctuator_toggle_on_restart(spark, tmp_path):
-    """Toggling emit_every_ms ON over a checkpoint written in PLAIN mode
-    requires a FRESH checkpoint (ADVICE r10, documented on the operator):
-    Spark itself blocks the recovery — adding a timeout changes the
-    internal state schema (a timeoutTimestamp column) and the UnsafeRow
-    layout, so the query fails LOUDLY at state load (schema check, and
-    row-format validation even with stateSchemaCheck=false) rather than
-    reaching the fold with 2-tuple entries.  This pins that the failure
-    is Spark's clear state-incompatibility error, not a confusing
-    IndexError from inside the pickle blob; the fold additionally
-    upgrades any legacy 2-tuple entries in place as defense."""
-    import time as _time
-    import uuid as _uuid
-
-    from confluent_kafka_streams_examples_spark.streaming.processor import (
-        running_total_bucketed,
-    )
-
-    src = str(tmp_path / "src")
-    write_batch(spark, src, [("a", 5.0, ts(0)), ("c", 2.0, ts(0))])
-    stream = spark.readStream.schema(EVENT_SCHEMA).parquet(src)
-    qname = f"tg{_uuid.uuid4().hex[:8]}"
-    ckpt = f"{tmp_path}/ckpt_{qname}"
-    rows: list = []
-
-    def sink(batch_df, _bid):
-        rows.extend(batch_df.collect())
-
-    # phase 1: plain mode writes 2-tuple entries into the checkpoint
-    # (foreachBatch, not the memory sink — memory cannot recover from a
-    # checkpoint, and phase 2 restarts from this one)
-    q = (
-        running_total_bucketed(stream, "key", "value", n_buckets=1)
-        .writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    assert any(r["key"] == "a" for r in rows)
-    rows.clear()
-    # phase 2: same checkpoint, punctuator newly enabled — Spark must
-    # refuse with its state-incompatibility error
-    stream2 = spark.readStream.schema(EVENT_SCHEMA).parquet(src)
-    write_batch(spark, src, [("a", 1.0, ts(1))])
-    q2 = (
-        running_total_bucketed(
-            stream2, "key", "value", n_buckets=1, emit_every_ms=100
-        )
-        .writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    exc = None
-    try:
-        deadline = _time.monotonic() + 60
-        while _time.monotonic() < deadline:
-            exc = q2.exception()
-            if exc is not None or not q2.isActive:
-                exc = exc or q2.exception()
-                break
-            _time.sleep(0.5)
-    finally:
-        q2.stop()
-    assert exc is not None, "toggle over a plain checkpoint must fail loudly"
-    msg = str(exc)
-    assert "STATE" in msg.upper() or "schema" in msg.lower(), msg
-    assert "IndexError" not in msg, msg
 
 
 @pytest.mark.parametrize("how", ["left_outer", "full_outer"])

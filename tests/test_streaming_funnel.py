@@ -22,19 +22,15 @@ import pytest
 
 from confluent_kafka_streams_examples_spark.streaming.funnel import (
     funnel_stage_stream,
-    funnel_stage_stream_bucketed,
 )
 
-# Every contract test runs against BOTH implementations: the per-user
-# fold and the bucketed-state fast path (packed per-bucket user vector,
-# numpy min-cascade — streaming/funnel.py) are required to be
-# semantically indistinguishable; only the state layout differs.
-IMPLS = [
-    pytest.param(funnel_stage_stream, id="per_user"),
-    pytest.param(
-        lambda st: funnel_stage_stream_bucketed(st, n_buckets=8), id="bucketed"
-    ),
-]
+
+def _fold(stream):
+    # n_buckets=8: several users share each bucket's packed state vector
+    return funnel_stage_stream(stream, n_buckets=8)
+
+
+IMPLS = [pytest.param(_fold, id="bucketed")]
 
 SCHEMA = StructType(
     [
@@ -59,7 +55,7 @@ def _drive(spark, tmp_path, batches, impl=funnel_stage_stream):
     # triggering query between processAllAvailable calls, splitting one
     # logical batch across two microbatches at a random point; the
     # at-arrival folds are batch-boundary-sensitive, so that race made
-    # the per-user/bucketed differential flake (~1 in 3 under load)
+    # the batch-by-batch differential flake (~1 in 3 under load)
     spark.createDataFrame(batches[0], SCHEMA).coalesce(1).write.mode(
         "append"
     ).parquet(src)
@@ -253,11 +249,39 @@ def test_funnel_stream_null_user_is_poison_guarded(spark, tmp_path, impl):
     assert [(r["user_id"], r["stage"]) for r in rows] == [(31, 2)]
 
 
-def test_funnel_bucketed_equals_per_user_on_random_stream(spark, tmp_path):
+def _conservative_reference(batches):
+    """Plain-Python conservative fold: batch by batch, per user, the
+    gated min-cascade of streaming/funnel.py, each stage time kept
+    from earlier batches.  Returns {user: (stage, t1, t2, t3)} in
+    epoch micros for users with a view."""
+    MAXI = 2**63 - 1
+    us = lambda d: int(d.timestamp() * 1_000_000)
+    state: dict = {}
+    for batch in batches:
+        for u in {e[0] for e in batch}:
+            evs = [(c, us(t)) for uu, c, t in batch if uu == u]
+            t1, t2, t3 = state.get(u, (MAXI, MAXI, MAXI))
+            t1 = min([t1] + [t for c, t in evs if c == "view"])
+            t2 = min([t2] + [t for c, t in evs if c == "click" and t > t1])
+            t3 = min([t3] + [t for c, t in evs if c == "purchase" and t > t2])
+            if t1 != MAXI:
+                state[u] = (t1, t2, t3)
+    return {
+        u: (
+            3 if t3 != MAXI else (2 if t2 != MAXI else 1),
+            t1,
+            None if t2 == MAXI else t2,
+            None if t3 == MAXI else t3,
+        )
+        for u, (t1, t2, t3) in state.items()
+    }
+
+
+def test_funnel_matches_python_reference_on_random_stream(spark, tmp_path):
     """Differential contract: over a seeded random multi-batch stream
-    spanning many users per bucket, the bucketed fold's final per-user
-    (stage, t1, t2, t3) must equal the per-user fold's exactly — the
-    bucketing is physical layout only."""
+    spanning many users per bucket, the fold's final per-user
+    (stage, t1, t2, t3) must equal a plain-Python conservative fold's
+    exactly — the bucketing is physical layout only."""
     import random
 
     rng = random.Random(42)
@@ -274,32 +298,20 @@ def test_funnel_bucketed_equals_per_user_on_random_stream(spark, tmp_path):
             )
         batches.append(batch)
 
-    def final_state(rows):
-        # update-mode refinement is monotone (stage never regresses,
-        # stage times only decrease), so the final state per user is
-        # the max stage with the min observed time per stage column
-        best = {}
-        for r in rows:
-            s, t1, t2, t3 = best.get(r["user_id"], (0, None, None, None))
-            mn = lambda a, b: b if a is None else (a if b is None else min(a, b))
-            best[r["user_id"]] = (
-                max(s, r["stage"]),
-                mn(t1, r["t1_us"]),
-                mn(t2, r["t2_us"]),
-                mn(t3, r["t3_us"]),
-            )
-        return best
-
-    per_user = final_state(_drive(spark, tmp_path / "pu", batches))
-    bucketed = final_state(
-        _drive(
-            spark,
-            tmp_path / "bk",
-            batches,
-            lambda st: funnel_stage_stream_bucketed(st, n_buckets=8),
+    # update-mode refinement is monotone (stage never regresses, stage
+    # times only decrease), so the final state per user is the max
+    # stage with the min observed time per stage column
+    best = {}
+    mn = lambda a, b: b if a is None else (a if b is None else min(a, b))
+    for r in _drive(spark, tmp_path, batches, _fold):
+        s, t1, t2, t3 = best.get(r["user_id"], (0, None, None, None))
+        best[r["user_id"]] = (
+            max(s, r["stage"]),
+            mn(t1, r["t1_us"]),
+            mn(t2, r["t2_us"]),
+            mn(t3, r["t3_us"]),
         )
-    )
-    assert per_user == bucketed
+    assert best == _conservative_reference(batches)
 
 
 def test_funnel_exact_readmits_after_late_view_where_conservative_cannot(
