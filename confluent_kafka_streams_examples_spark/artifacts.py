@@ -276,8 +276,8 @@ def materialized(
     (typically source row count x bytes per output row — see
     `parquet_row_count`).  When the estimate exceeds one target file
     the build result is repartitioned to ~TARGET_FILE_BYTES files so
-    the write parallelizes (`write_partitions`); below that the plan
-    is untouched."""
+    the write parallelizes (`write_partitions`), hashed on
+    ``partition_by`` when set; below that the plan is untouched."""
     path = artifact_path(source_file, tag)
     success_marker = os.path.join(path, "_SUCCESS")
     if not os.path.exists(success_marker):
@@ -285,8 +285,11 @@ def materialized(
         try:
             built = build()
             n_parts = write_partitions(est_bytes, spark)
-            if n_parts > 1 and partition_by is None:
-                built = built.repartition(n_parts)
+            if n_parts > 1:
+                # a partitioned layout hashes on its key, so each
+                # partition directory is written by one task, not all
+                keys = [] if partition_by is None else [partition_by]
+                built = built.repartition(n_parts, *keys)
             writer = built.write.mode("overwrite")
             if partition_by is not None:
                 # partitioned layout (e.g. IVF inverted lists): consumers

@@ -112,13 +112,36 @@ def tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
+def _ngram_windows(tk: Column, n: int) -> Column:
+    """array<string> of the word ``n``-grams over the token-array column
+    ``tk``, in position order; empty for fewer than ``n`` tokens (or a
+    NULL array).
+
+    ``tk`` must be a STAGED column (a projected ``split(text, ' ')``),
+    never the ``split`` expression itself (r12): ``element_at(tk, ...)``
+    inside the lambda otherwise re-evaluates the whole split per
+    element — n splits per position, O(tokens^2 x n) per document
+    (measured 3x on with_minhash_signatures and 6x on the duplicate-spans
+    gram stage at x20; CollapseProject keeps the staging projection
+    because the array is referenced many times)."""
+    # sequence(0, size-n) is inclusive => size-n+1 windows; guard size < n
+    # (sequence(0,-1) would generate a DESCENDING range, not empty!)
+    return F.when(
+        F.size(tk) >= n,
+        F.transform(
+            F.sequence(F.lit(0), F.size(tk) - n),
+            lambda i: F.concat_ws(" ", *[F.element_at(tk, i + j + 1) for j in range(n)]),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+
+
 def shingles(
     df: DataFrame, id_col: str, text_col: str, n: int = 3, distinct: bool = True
 ) -> DataFrame:
     """(id, shingle) — word n-grams per document, DISTINCT by default.
 
-    Built with array higher-order functions (JVM-side): split -> sliding
-    windows via transform over an index sequence -> explode -> distinct.
+    Built with array higher-order functions (JVM-side): split (staged,
+    see _ngram_windows) -> sliding windows -> explode -> distinct.
     Documents with < n tokens produce no shingles.
 
     ``distinct=False`` skips the dedup SHUFFLE — correct whenever the
@@ -126,28 +149,11 @@ def shingles(
     or a semi-join probe): the distinct here shuffles (id, n-gram
     STRING) rows, the single most expensive exchange in the whole LSH
     family at corpus scale.
-
-    The token array is STAGED as a column before the window transform
-    (r12): ``element_at(tok, ...)`` inside the lambda otherwise
-    re-evaluates the whole ``split(text)`` per element — n splits per
-    position, O(tokens^2 x n) per document (the same staging lesson
-    measured 3x on with_minhash_signatures and 6x on the
-    duplicate-spans gram stage at x20; CollapseProject keeps the
-    staging projection because the array is referenced many times).
     """
     staged = _spread(df).select(
         F.col(id_col), F.split(F.col(text_col), " ").alias("_tk")
     )
-    tk = F.col("_tk")
-    # sequence(0, size-n) is inclusive => size-n+1 windows; guard size < n
-    # (sequence(0,-1) would generate a DESCENDING range, not empty!)
-    windows = F.when(
-        F.size(tk) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(tk) - n),
-            lambda i: F.concat_ws(" ", *[F.element_at(tk, i + j + 1) for j in range(n)]),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    windows = _ngram_windows(F.col("_tk"), n)
     out = staged.select(F.col(id_col), F.explode(windows).alias("shingle"))
     return out.distinct() if distinct else out
 
@@ -245,18 +251,11 @@ def winnow_fingerprints(
     DISTINCT collapses map-side first.  Fingerprint tables then join
     like any inverted index — with the same ``max_df`` hot-key
     discipline as the full-shingle path when self-joined.  The token
-    array is staged before the gram transform (see shingles)."""
+    array is staged before the gram transform (see _ngram_windows)."""
     staged = _spread(df).select(
         F.col(id_col), F.split(F.col(text_col), " ").alias("_tk")
     )
-    tk = F.col("_tk")
-    grams = F.when(
-        F.size(tk) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(tk) - n),
-            lambda i: F.concat_ws(" ", *[F.element_at(tk, i + j + 1) for j in range(n)]),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    grams = _ngram_windows(F.col("_tk"), n)
     pos = staged.select(
         F.col(id_col), F.posexplode(grams).alias("pos", "gram")
     )
@@ -279,7 +278,6 @@ def duplicate_spans(
     text_col: str,
     n: int = 5,
     min_docs: int = 2,
-    spread: bool = True,
 ) -> DataFrame:
     """Maximal cross-document duplicated token spans — substring-level
     exact dedup (Lee et al., "Deduplicating Training Data Makes
@@ -315,32 +313,16 @@ def duplicate_spans(
     row per token occurrence; to sample it down, winnow_fingerprints
     is the index-size lever, at the cost of span-boundary resolution.
 
-    ``spread=False`` skips the conditional input repartition for
-    callers that KNOW their input is already wide (e.g. a fresh
-    repartition upstream).  Measure before using it: on a local run the
-    clean-corpus composition got SLOWER with it (4.4s vs 3.7s at sf0.1)
-    because AQE had coalesced the upstream join's output to a handful
-    of partitions, single-threading the gram explode — the exact shape
-    the spread exists to fix.
-
-    The token array is STAGED as a column before the gram transform
-    (r12): with ``element_at`` reading the unstaged ``split(text)``
-    inside the lambda, the split re-evaluated per element — measured
-    6x the whole pos stage at x20 (5.43s -> 0.94s staged, span sets
-    identical; see shingles)."""
-    staged = (_spread(df) if spread else df).select(
+    The input always takes the conditional ``_spread``: skipping it was
+    measured SLOWER on the clean-corpus composition (4.4s vs 3.7s at
+    sf0.1), because AQE had coalesced the upstream join's output to a
+    handful of partitions, single-threading the gram explode.  The
+    token array is staged before the gram transform (5.43s -> 0.94s
+    for the pos stage at x20; see _ngram_windows)."""
+    staged = _spread(df).select(
         F.col(id_col), F.split(F.col(text_col), " ").alias("_tk")
     )
-    tk = F.col("_tk")
-    grams = F.when(
-        F.size(tk) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(tk) - n),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(tk, i + j + 1) for j in range(n)]
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    grams = _ngram_windows(F.col("_tk"), n)
     pos = (
         staged
         .select(F.col(id_col), F.posexplode(grams).alias("pos0", "gram"))
@@ -395,7 +377,6 @@ def remove_duplicate_spans(
     text_col: str,
     n: int = 5,
     min_docs: int = 2,
-    spread: bool = True,
 ) -> DataFrame:
     """Span-level corpus cleaning: cut every cross-document duplicated
     span (``duplicate_spans`` above) out of every document instead of
@@ -413,9 +394,7 @@ def remove_duplicate_spans(
     the token filter is a map-side array filter with an ``exists``
     probe against the span array.  Documents with no duplicated span
     pay the join probe and nothing else."""
-    spans = duplicate_spans(
-        df, id_col, text_col, n=n, min_docs=min_docs, spread=spread
-    )
+    spans = duplicate_spans(df, id_col, text_col, n=n, min_docs=min_docs)
     per_doc = spans.groupBy(id_col).agg(
         F.collect_list(F.struct("span_start", "span_end")).alias("_spans")
     )
@@ -423,7 +402,7 @@ def remove_duplicate_spans(
     # over every token — is referenced twice (count + hash) and would
     # be evaluated twice per row inline; staging it (and the token
     # array) as columns makes each heavy array expression evaluate
-    # exactly once per document (see shingles for the mechanism)
+    # exactly once per document (see _ngram_windows for the mechanism)
     tok = F.split(F.col(text_col), " ")
     indexed = F.transform(
         F.col("_tk"), lambda t, i: F.struct((i + 1).alias("p"), t.alias("t"))
@@ -730,16 +709,20 @@ def minhash_signatures(
     return sh.groupBy(id_col).agg(*aggs)
 
 
-def band_signatures(
-    sig: DataFrame, id_col: str, num_hashes: int, bands: int
-) -> DataFrame:
-    """(id, band_idx, band_sig) — signature rows exploded into LSH
-    bands of ``num_hashes/bands`` components each.  Shared by the
-    self-join, estimate-verify and incremental dedup paths.
+def band_signatures(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """Signature rows exploded into LSH bands of ``num_hashes/bands``
+    components each: every column of ``sig`` except mh0..mh{K-1} (the
+    id, and in the streaming operators the event time) carried through,
+    then (band_idx, band_sig), one row per band.  The one band layout of
+    the engine: the batch self-join, estimate-verify and incremental
+    paths and the streaming near-dup operators (streaming/neardup.py)
+    all band through it, so a streamed band key equi-joins a stored one.
 
     Built as one SQL string (see simhash64): the per-band struct loop
     cost ~0.15 s of py4j round trips per construction across every
     LSH-family query."""
+    mh = {f"mh{j}" for j in range(num_hashes)}
+    carried = [c for c in sig.columns if c not in mh]
     rows_per_band = num_hashes // bands
     structs = ", ".join(
         "named_struct('band_idx', {bi}, 'band_sig', concat_ws('|', {parts}))".format(
@@ -752,8 +735,21 @@ def band_signatures(
         for bi in range(bands)
     )
     return sig.select(
-        F.col(id_col), F.explode(F.expr(f"array({structs})")).alias("band")
-    ).select(id_col, "band.band_idx", "band.band_sig")
+        *[F.col(c) for c in carried],
+        F.explode(F.expr(f"array({structs})")).alias("band"),
+    ).select(*carried, "band.band_idx", "band.band_sig")
+
+
+def _band_pairs(banded: DataFrame, id_col: str) -> DataFrame:
+    """(id_a, id_b), id_a < id_b, for every pair of ``banded`` rows
+    sharing a (band_idx, band_sig) key — once per shared band."""
+    a = banded.select(F.col(id_col).alias("id_a"), "band_idx", "band_sig")
+    b = banded.select(F.col(id_col).alias("id_b"), "band_idx", "band_sig")
+    return (
+        a.join(b, ["band_idx", "band_sig"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+    )
 
 
 def minhash_lsh_pairs(
@@ -796,7 +792,7 @@ def minhash_lsh_pairs(
     computed_here = sig is None
     if computed_here:
         sig = minhash_signatures(df, id_col, text_col, num_hashes, n)
-    banded = band_signatures(sig, id_col, num_hashes, bands)
+    banded = band_signatures(sig, num_hashes, bands)
     if computed_here:
         # materialize before the self-join: the 16-agg signature
         # pipeline would otherwise run twice (once per join side).  A
@@ -808,13 +804,7 @@ def minhash_lsh_pairs(
         # OPTIMIZATION_r11.md) while pinning executor storage that a
         # 100 TB run wants for the join itself.
         banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
-    a = banded.select(F.col(id_col).alias("id_a"), "band_idx", "band_sig")
-    b = banded.select(F.col(id_col).alias("id_b"), "band_idx", "band_sig")
-    pairs = (
-        a.join(b, ["band_idx", "band_sig"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-    )
+    pairs = _band_pairs(banded, id_col)
     return pairs.distinct() if distinct_pairs else pairs
 
 
@@ -839,13 +829,16 @@ def incremental_minhash_pairs(
     {'corpus','batch'}); new-new pairs appear once (id_a < id_b).
     """
     sig_new = minhash_signatures(new_docs, id_col, text_col, num_hashes, n)
-    banded_new = band_signatures(sig_new, id_col, num_hashes, bands).persist(
+    band_cols = [id_col, "band_idx", "band_sig"]
+    banded_new = band_signatures(sig_new, num_hashes, bands).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    banded_old = band_signatures(corpus_sig, id_col, num_hashes, bands)
+    banded_old = band_signatures(corpus_sig, num_hashes, bands)
     a = banded_new.select(F.col(id_col).alias("id_a"), "band_idx", "band_sig")
-    b = banded_old.withColumn("match_src", F.lit("corpus")).unionByName(
-        banded_new.withColumn("match_src", F.lit("batch"))
+    b = banded_old.select(*band_cols).withColumn(
+        "match_src", F.lit("corpus")
+    ).unionByName(
+        banded_new.select(*band_cols).withColumn("match_src", F.lit("batch"))
     ).select(
         F.col(id_col).alias("id_b"), "band_idx", "band_sig", "match_src"
     )
@@ -890,15 +883,7 @@ def minhash_estimate_pairs(
         sig = minhash_signatures(df, id_col, text_col, num_hashes, n).persist(
             StorageLevel.MEMORY_AND_DISK
         )
-    banded = band_signatures(sig, id_col, num_hashes, bands)
-    a = banded.select(F.col(id_col).alias("id_a"), "band_idx", "band_sig")
-    b = banded.select(F.col(id_col).alias("id_b"), "band_idx", "band_sig")
-    pairs = (
-        a.join(b, ["band_idx", "band_sig"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    pairs = _band_pairs(band_signatures(sig, num_hashes, bands), id_col).distinct()
     sa = sig.select(
         F.col(id_col).alias("id_a"),
         *[F.col(f"mh{j}").alias(f"a{j}") for j in range(num_hashes)],
@@ -1077,9 +1062,9 @@ def with_minhash_signatures(
     grouped) — which is what lets a STREAMING pipeline sign documents
     at arrival: a groupBy signature would be a stateful aggregate and
     could not precede the stateful LSH-bucket operator in one query.
-    Rows with fewer than ``n`` tokens get NULL signatures (the grouped
-    form simply has no row for them).  Drop them with the CHEAP
-    pre-projection predicate ``size(split(text, ' ')) >= n``, NOT a
+    Rows with fewer than ``n`` tokens or a NULL text are DROPPED, as the
+    grouped form has no row for them.  The drop is the CHEAP predicate
+    ``size(split(text, ' ')) >= n`` placed before the projection, NOT a
     post-projection ``mh0 IS NOT NULL``: Catalyst pushes that filter
     below this projection (and any exchange under it), which inlines
     the whole signing chain into the scan-stage filter and evaluates
@@ -1087,38 +1072,23 @@ def with_minhash_signatures(
     (SCALE.md r11).
 
     Three-stage projection on purpose: the token ARRAY is staged first
-    (r12 — ``element_at`` over an unstaged ``split`` re-evaluates the
-    split per element, O(tokens^2 x n) per row; see shingles), then
-    the (md5, conv) hash-pair array is materialized as ONE
-    intermediate column and the 16 array_min folds read it — inlining
-    the hash transform into each permutation expression defeats
-    common-subexpression elimination across lambda functions and
-    recomputes every digest 16x (measured 3.2x slower on 200k docs).
+    (see _ngram_windows), then the (md5, conv) hash-pair array is
+    materialized as ONE intermediate column and the 16 array_min folds
+    read it — inlining the hash transform into each permutation
+    expression defeats common-subexpression elimination across lambda
+    functions and recomputes every digest 16x (measured 3.2x slower on
+    200k docs).
     """
-    tk = F.col("__mh_tok")
-    windows = F.when(
-        F.size(tk) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(tk) - n),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(tk, i + j + 1) for j in range(n)]
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    hashes = F.transform(
-        windows,
-        lambda s: F.struct(
-            F.conv(F.substring(F.md5(s), 1, 12), 16, 10)
-            .cast("long")
-            .alias("h1"),
-            F.conv(F.substring(F.md5(s), 13, 12), 16, 10)
-            .cast("long")
-            .alias("h2"),
-        ),
+    def pair(s: Column) -> Column:
+        h1, h2 = hash_pair(s)
+        return F.struct(h1.alias("h1"), h2.alias("h2"))
+
+    hashes = F.transform(_ngram_windows(F.col("__mh_tok"), n), pair)
+    staged = (
+        df.filter(F.size(F.split(F.col(text_col), " ")) >= n)
+        .withColumn("__mh_tok", F.split(F.col(text_col), " "))
+        .withColumn("__mh_hashes", hashes)
     )
-    staged = df.withColumn(
-        "__mh_tok", F.split(F.col(text_col), " ")
-    ).withColumn("__mh_hashes", hashes)
     out = staged.select(
         *df.columns,
         *[

@@ -11,12 +11,13 @@ This module is that operator:
    `with_minhash_signatures` computes the identical Carter-Wegman
    signature the batch path stores, with array higher-order functions
    and no aggregation (a groupBy signature would be a second stateful
-   operator and could not precede the LSH state in one query).
-2. The signature splits into LSH bands (same layout as
-   `band_signatures`), one row per band, keyed by a hash bucket of the
-   band signature (the bucketed-state pattern of processor.py/funnel.py:
-   Python invocations per trigger bounded by n_buckets, not by the
-   band-key universe).
+   operator and could not precede the LSH state in one query); it drops
+   documents with fewer than ``n`` tokens, which have no signature.
+2. `band_signatures` splits the signature into LSH bands, one row per
+   band — the batch path's band layout by construction, not a parallel
+   copy — keyed by a hash bucket of the band signature (the
+   bucketed-state pattern of processor.py/funnel.py: Python invocations
+   per trigger bounded by n_buckets, not by the band-key universe).
 3. Per bucket, `applyInPandasWithState` holds {(band_idx, band_sig):
    [(doc_id, ts_us), ...]} for documents inside the WATERMARK HORIZON
    and emits a candidate pair (id_a = already-stored document, id_b =
@@ -83,27 +84,6 @@ PAIR_SCHEMA = StructType(
 _STATE_SCHEMA = StructType([StructField("blob", BinaryType())])
 
 
-def _band_structs(num_hashes: int, bands: int) -> list:
-    """Per-row LSH band structs over mh0..mh{K-1} columns — the same
-    '|'-joined band_sig layout as the stored-artifact path
-    (operators/dedup.py band_signatures), so streamed band keys join
-    the persisted signature table exactly."""
-    rows_per_band = num_hashes // bands
-    return [
-        F.struct(
-            F.lit(bi).alias("band_idx"),
-            F.concat_ws(
-                "|",
-                *[
-                    F.col(f"mh{bi * rows_per_band + r}").cast("string")
-                    for r in range(rows_per_band)
-                ],
-            ).alias("band_sig"),
-        )
-        for bi in range(bands)
-    ]
-
-
 def neardup_candidates_stream(
     stream: DataFrame,
     id_col: str = "doc_id",
@@ -131,36 +111,14 @@ def neardup_candidates_stream(
             F.col(ts_col).alias("__ts"),  # keep the watermark attribute
             F.col(text_col),
         )
-        # short/null docs have no signature (the grouped twin has no row
-        # for them) — gate on the CHEAP equivalent predicate BEFORE the
-        # signing projection.  A post-sign filter on mh0 IS NOT NULL
-        # gets predicate-pushed below the projection (and any exchange)
-        # and re-evaluates the ENTIRE 16-permutation chain inside the
-        # scan stage — measured 10x the whole pillar (SCALE.md r11)
-        .filter(
-            F.col("doc_id").isNotNull()
-            & (F.size(F.split(F.col(text_col), " ")) >= n)
-        )
+        .filter(F.col("doc_id").isNotNull())
     )
     signed = with_minhash_signatures(base, text_col, num_hashes, n).drop(
         text_col
     )
-    band_structs = _band_structs(num_hashes, bands)
-    banded = signed.select(
-        "doc_id",
-        "ts_us",
-        "__ts",
-        F.explode(F.array(*band_structs)).alias("band"),
-    ).select(
-        "doc_id",
-        "ts_us",
-        "__ts",
-        F.col("band.band_idx").alias("band_idx"),
-        F.col("band.band_sig").alias("band_sig"),
-        F.pmod(
-            F.xxhash64(F.col("band.band_idx"), F.col("band.band_sig")),
-            F.lit(n_buckets),
-        ).cast("long").alias("bucket"),
+    banded = band_signatures(signed, num_hashes, bands).withColumn(
+        "bucket",
+        F.pmod(F.xxhash64("band_idx", "band_sig"), F.lit(n_buckets)).cast("long"),
     )
 
     def fold(
@@ -272,8 +230,8 @@ def neardup_vs_corpus_stream(
 
     ``corpus_sig`` is the stored (id, mh0..mh{K-1}) signature table that
     `incremental_minhash_pairs` / `dedup_incremental_persisted` already
-    maintain (~1e-4 the corpus bytes); it is banded here with the SAME
-    band_sig layout, so a streamed key equi-joins stored rows exactly.
+    maintain (~1e-4 the corpus bytes); it and the stream are both banded
+    by `band_signatures`, so a streamed key equi-joins stored rows exactly.
 
     Stateless by design: no watermark, no state store — the corpus side
     carries the history.  A pair emits once per matching band per
@@ -291,25 +249,18 @@ def neardup_vs_corpus_stream(
     against a signature artifact bucketed by band_sig co-locates both
     sides instead.
     """
-    # cheap pre-sign short-doc gate, NOT a post-sign mh0 filter — see
-    # neardup_candidates_stream for the pushed-predicate double-compute
-    # this avoids (10x measured)
     base = stream.select(
         F.col(id_col).cast("long").alias("doc_id"), F.col(text_col)
-    ).filter(
-        F.col("doc_id").isNotNull()
-        & (F.size(F.split(F.col(text_col), " ")) >= n)
-    )
+    ).filter(F.col("doc_id").isNotNull())
     signed = with_minhash_signatures(base, text_col, num_hashes, n).drop(
         text_col
     )
-    banded_new = signed.select(
-        F.col("doc_id").alias("id_a"),
-        F.explode(F.array(*_band_structs(num_hashes, bands))).alias("band"),
-    ).select("id_a", F.col("band.band_idx"), F.col("band.band_sig"))
+    banded_new = band_signatures(signed, num_hashes, bands).select(
+        F.col("doc_id").alias("id_a"), "band_idx", "band_sig"
+    )
     if broadcast_batch:
         banded_new = banded_new.hint("broadcast")
-    banded_corpus = band_signatures(corpus_sig, id_col, num_hashes, bands).select(
+    banded_corpus = band_signatures(corpus_sig, num_hashes, bands).select(
         F.col(id_col).alias("id_b"), "band_idx", "band_sig"
     )
     return banded_new.join(banded_corpus, ["band_idx", "band_sig"]).select(

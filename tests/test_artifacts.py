@@ -468,6 +468,34 @@ def test_materialized_write_parallelism_tracks_est_bytes(tmp_path, spark):
     assert len(parquet_files(big)) == 4
 
 
+def test_materialized_partitioned_write_hashes_on_partition_key(tmp_path, spark):
+    """A partitioned artifact above one target file is repartitioned on
+    its partition key: each partition directory gets one data file, not
+    one per input partition, and no row is lost."""
+    from collections import Counter
+
+    from confluent_kafka_streams_examples_spark.artifacts import (
+        TARGET_FILE_BYTES,
+        materialized,
+    )
+
+    src = tmp_path / "embeddings.parquet"
+    src.write_bytes(b"v1")
+
+    def build():
+        return spark.range(0, 1000, 1, 8).selectExpr(
+            "id AS vec_id", "CAST(id % 2 AS INT) AS list_id"
+        )
+
+    art = materialized(
+        spark, str(src), "probe|partitioned", build,
+        partition_by="list_id", est_bytes=3 * TARGET_FILE_BYTES,
+    )
+    dirs = Counter(os.path.basename(os.path.dirname(f)) for f in art.inputFiles())
+    assert dirs == {"list_id=0": 1, "list_id=1": 1}
+    assert art.count() == 1000
+
+
 def test_schema_not_cached_without_stamp(spark, tmp_path):
     """A stamp file that cannot be stat'ed gives no version to key the
     schema cache on: a table regenerated with a different schema behind

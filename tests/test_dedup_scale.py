@@ -189,6 +189,31 @@ def test_minhash_estimate_takes_id_column_needing_quotes(spark):
     assert got == [(1, 2, 16, 1.0)]
 
 
+def test_band_signatures_carry_non_signature_columns(spark):
+    """band_signatures carries every column but mh0..mh{K-1} through
+    (the streaming operators band a (doc_id, ts, mh*) frame), and the
+    band keys do not depend on what else the frame carries."""
+    import datetime as dt
+    from collections import Counter
+
+    rows = [
+        (1, "alpha beta gamma delta epsilon zeta eta"),
+        (2, "one two three four five six seven eight"),
+    ]
+    sig = dedup.minhash_signatures(_docs(spark, rows), "doc_id", "text", 16, 3)
+    with_ts = sig.withColumn("ts", F.lit(dt.datetime(2024, 1, 1))).select(
+        "doc_id", "ts", *[f"mh{j}" for j in range(16)]
+    )
+    banded = dedup.band_signatures(with_ts, 16, 4)
+    assert banded.columns == ["doc_id", "ts", "band_idx", "band_sig"]
+    got = banded.collect()
+    assert Counter(r.doc_id for r in got) == {1: 4, 2: 4}
+    id_only = dedup.band_signatures(sig, 16, 4)
+    assert sorted((r.doc_id, r.band_idx, r.band_sig) for r in got) == sorted(
+        tuple(r) for r in id_only.collect()
+    )
+
+
 def test_incremental_pairs_never_pair_old_with_old(spark):
     text = "one two three four five six seven eight nine ten eleven twelve"
     corpus = _docs(spark, [(1, text), (2, text), (3, "other corpus content entirely distinct")])

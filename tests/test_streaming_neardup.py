@@ -17,7 +17,6 @@ import uuid
 
 import pytest
 
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     LongType,
     StringType,
@@ -96,17 +95,22 @@ def _drive(spark, tmp_path, batches, delay="1 hour", n_buckets=8):
 
 
 def test_minhash_signature_exprs_match_grouped(spark):
-    """The per-row signature columns equal the grouped signature table
-    on real documents (sf0.001) — same md5, same Carter-Wegman
-    permutations, min-over-array == min-over-group."""
+    """The per-row signature table equals the grouped signature table
+    on real documents (sf0.001) plus a 2-token and a NULL-text document
+    — same md5, same Carter-Wegman permutations, min-over-array ==
+    min-over-group, and the per-row signer's own short/NULL gate drops
+    exactly the documents the grouped form has no row for."""
     from confluent_kafka_streams_examples_spark.operators.dedup import (
         minhash_signatures,
         with_minhash_signatures,
     )
     from confluent_kafka_streams_examples_spark.session import load_table
 
-    docs = load_table(spark, "documents", "/root/testdata/sf0.001").select(
+    real = load_table(spark, "documents", "/root/testdata/sf0.001").select(
         "doc_id", "text"
+    )
+    docs = real.unionByName(
+        spark.createDataFrame([(-1, "two tokens"), (-2, None)], real.schema)
     )
     grouped = {
         r["doc_id"]: tuple(r[f"mh{j}"] for j in range(16))
@@ -114,10 +118,9 @@ def test_minhash_signature_exprs_match_grouped(spark):
     }
     perrow = {
         r["doc_id"]: tuple(r[f"mh{j}"] for j in range(16))
-        for r in with_minhash_signatures(docs, "text", 16, 3)
-        .filter(F.col("mh0").isNotNull())
-        .collect()
+        for r in with_minhash_signatures(docs, "text", 16, 3).collect()
     }
+    assert -1 not in grouped and -2 not in grouped
     assert perrow == grouped
 
 
