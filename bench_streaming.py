@@ -26,6 +26,11 @@ Prints ONE JSON line:
 
 Env knobs: SPARK_GRAFT_STREAM_ROWS (default 2_000_000),
 SPARK_GRAFT_CPUS (session parallelism, as in bench.py).
+
+Usage: ``python bench_streaming.py [PILLAR ...]`` — pillar names on the
+command line run only those pipelines (same JSON line, ``value`` the
+min over them); none runs all.  An unknown name exits non-zero and
+lists the valid ones.
 """
 
 from __future__ import annotations
@@ -352,9 +357,17 @@ PIPELINES = [
 POLL_PILLARS = {"running_total_punctuated"}
 
 
-def main() -> None:
+def main(argv: list[str]) -> None:
     from bench import adjudicate_host, host_markers
 
+    valid = [name for name, _, _ in PIPELINES]
+    unknown = sorted(set(argv) - set(valid))
+    if unknown:
+        sys.exit(
+            f"unknown pillar(s): {', '.join(unknown)}; "
+            f"valid: {', '.join(valid)}"
+        )
+    pipelines = [p for p in PIPELINES if not argv or p[0] in argv]
     host_start = host_markers("start")
     root = tempfile.mkdtemp(prefix="ckse_stream_bench_")
     try:
@@ -376,7 +389,7 @@ def main() -> None:
         # as in bench.py
         reps = int(os.environ.get("SPARK_GRAFT_STREAM_REPS", "2"))
         results: dict[str, float] = {}
-        for name, factory, rows in PIPELINES:
+        for name, factory, rows in pipelines:
             spark = get_spark(f"ckse-bench-streaming-{name}")
             spark.sparkContext.setLogLevel("ERROR")
             try:
@@ -426,4 +439,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    sys.exit(main(sys.argv[1:]))

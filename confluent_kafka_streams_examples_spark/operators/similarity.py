@@ -240,8 +240,14 @@ def semdedup(
         vecs.filter(F.col(id_col) < n_clusters)
         .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("c"))
         .orderBy("cid")
+        .limit(n_clusters + 1)
         .collect()
     )
+    if len(cent_rows) > n_clusters:
+        raise ValueError(
+            f"semdedup: more than n_clusters={n_clusters} rows have "
+            f"{id_col} < {n_clusters}; init centroids need unique dense ids"
+        )
     cent_mat = np.array([r["c"] for r in cent_rows], dtype=np.float64)
     cent_ids = np.array([r["cid"] for r in cent_rows], dtype=np.int64)
     bc = vecs.sparkSession.sparkContext.broadcast((cent_mat, cent_ids))

@@ -700,37 +700,37 @@ from confluent_kafka_streams_examples_spark import queries_corpus  # noqa: E402,
 # ---------------------------------------------------------------------
 
 _VERIFY_FIRST = [
-    # GENERATED by scripts/gen_verify_order.py (round 12) — do not
+    # GENERATED by scripts/gen_verify_order.py (round 13) — do not
     # hand-edit; regenerate after any query/helper change and paste
     # via scripts/paste_verify_order.py.
     # Head: changed since the last verified snapshot or never green.
     "pipeline_training_export", "neardup_verify_levenshtein",
     "dedup_lsh_recall_eval", "dedup_cluster_representatives",
     "dedup_clusters", "dedup_minhash_lsh", "pipeline_clean_corpus",
-    "sketch_hll_incremental", "corpus_chunk_documents",
-    "dedup_duplicate_spans", "dedup_span_removal", "dedup_simhash64",
-    "dedup_containment", "dedup_ngram_jaccard", "dedup_overlap_scores",
-    "dedup_minhash_verify", "similarity_ivf_pruned",
-    "similarity_ivf_dynamic", "similarity_pq_adc", "pq_recall_eval",
-    "dedup_embedding_cosine", "similarity_ann_lsh",
-    "source_overlap_matrix", "ann_recall_eval", "similarity_ivf_append",
-    "ivf_drift_stat", "dedup_incremental", "dedup_simhash",
-    "similarity_ivf_probe", "bpe_pair_counts", "decontaminate_train",
-    "dedup_incremental_persisted", "ngram_novelty_scores",
-    "doc_winnow_fingerprints",
+    "sketch_hll_incremental", "dedup_duplicate_spans",
+    "dedup_span_removal", "dedup_containment", "dedup_ngram_jaccard",
+    "dedup_overlap_scores", "dedup_minhash_verify",
+    "similarity_ivf_pruned", "similarity_ivf_dynamic", "similarity_pq_adc",
+    "pq_recall_eval", "source_overlap_matrix", "similarity_ivf_append",
+    "ivf_drift_stat", "dedup_incremental", "bpe_pair_counts",
+    "decontaminate_train", "dedup_incremental_persisted",
+    "ngram_novelty_scores", "doc_winnow_fingerprints",
+    "semdedup_prune_scaled", "semdedup_prune",
     # Tail: oldest green first.
+    "corpus_chunk_documents", "dedup_simhash64", "similarity_ann_lsh",
     "sketch_hll_distinct", "events_profile", "bpe_merge_rounds",
-    "embedding_kmeans_fixed", "topk_per_key", "event_gaps",
-    "stream_stream_outer_join", "ktable_latest", "pack_sequences",
-    "dedup_cdc_chunks", "sketch_hll_eval", "events_profile_extended",
-    "text_stats", "semdedup_prune_scaled", "events_json_analytics",
-    "user_retention_cohorts",
+    "topk_per_key", "event_gaps", "stream_stream_outer_join",
+    "ktable_latest", "pack_sequences", "dedup_embedding_cosine",
+    "ann_recall_eval", "sketch_hll_eval", "events_profile_extended",
+    "text_stats", "events_json_analytics", "user_retention_cohorts",
+    "stream_stream_window_join", "ktable_filter_extract",
+    "corpus_shard_export",
     # Past the 50-entry window from here: these stay green on
     # unchanged bodies and lead the next round's rotation.
-    "large_volume_orders", "rollup_pricing", "market_share",
-    "hybrid_search", "lang_profile", "cube_order_priority",
-    "stream_stream_window_join", "ktable_filter_extract", "basic_pipeline",
-    "product_type_profit", "corpus_shard_export", "similarity_topk",
+    "dedup_simhash", "similarity_ivf_probe", "embedding_kmeans_fixed",
+    "dedup_cdc_chunks", "large_volume_orders", "rollup_pricing",
+    "market_share", "hybrid_search", "lang_profile", "cube_order_priority",
+    "basic_pipeline", "product_type_profit", "similarity_topk",
     "lang_id_heuristic", "setops_users", "windowed_session",
     "stream_table_join", "forecast_revenue_change", "important_part_value",
     "corpus_mixture_sample", "dedup_bloom_prefilter",
@@ -759,8 +759,7 @@ _VERIFY_FIRST = [
     "semi_join_parts", "events_concurrent_degree_salted",
     "embedding_quantize", "agg_pricing_summary", "user_running_value",
     "returned_item_customers", "pii_scrub", "stream_stream_left_join",
-    "events_concurrent_degree", "semdedup_prune",
-    "quality_histogram_threshold",
+    "events_concurrent_degree", "quality_histogram_threshold",
 ]
 
 

@@ -855,15 +855,24 @@ def similarity_ivf_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus-side assignment lives in the materialized index)
     dist = _ivf_dist(qbase, _ivf_codebook_table(spark, sf_dir))
 
-    # router: nprobe=2 nearest lists per query vector (Q x 2 scalars)
+    # router: nprobe=2 nearest lists per query vector (Q x 2 scalars).
+    # Bounded driver collect: on a dense-id corpus the query set is ids
+    # 0..4, so more than 2 x 5 rows means negative ids joined it
+    n_route = 2 * 5
     wq = Window.partitionBy("query_id").orderBy("d2", "label")
     probe_rows = (
         dist.select(F.col("vec_id").alias("query_id"), "label", "d2")
         .withColumn("crn", F.row_number().over(wq))
         .filter(F.col("crn") <= 2)
         .select("query_id", "label")
+        .limit(n_route + 1)
         .collect()
     )
+    if len(probe_rows) > n_route:
+        raise ValueError(
+            f"similarity_ivf_pruned: router returned more than {n_route} "
+            "rows; the query set vec_id < 5 needs non-negative dense ids"
+        )
     probed_lists = sorted({r["label"] for r in probe_rows})
     probe = spark.createDataFrame(
         [(r["query_id"], r["label"]) for r in probe_rows],

@@ -27,6 +27,21 @@ Scale notes (100 TB design):
   checkpoint checksum files and Hadoop ``.crc`` sidecars stay on.  Spark
   itself falls back to this manager for any filesystem whose
   ``FileContext`` is unsupported.
+- Under a local master, file listing never becomes a Spark job
+  (``spark.sql.sources.parallelPartitionDiscovery.threshold`` at its
+  maximum).  A file stream's ``getBatch`` lists the batch's files as
+  root paths of an ``InMemoryFileIndex``; above the default threshold
+  of 32 paths Spark lists them with a distributed job of one task per
+  path, which on ``local[N]`` runs in the same JVM against the same
+  disk as the serial listing it replaces.  The two 64-file drain
+  triggers of the ``stream_deadletter`` benchmark spent 563 and 805 ms
+  in ``getBatch`` (a 1-file batch: ~10 ms); listed on the driver they
+  spend 43 and 49 ms.  The drain (``closed_loop_s``, medians of
+  alternating runs on a 4-core VM) fell from 1.92 to 1.22 s on
+  ``stream_processor`` and from 4.45 to 3.17 s on ``stream_deadletter``.
+  The same holds for a batch read of more than 32 paths.  A cluster
+  master keeps Spark's default: there parallel listing of HDFS or
+  object-store paths pays off.
 """
 
 from __future__ import annotations
@@ -94,7 +109,10 @@ def get_spark(app_name: str = "confluent-kafka-streams-examples-spark") -> Spark
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
     if not os.environ.get("MASTER") and not os.environ.get("SPARK_MASTER"):
-        builder = builder.master(f"local[{cpus}]")
+        # see the module docstring: list every path set on the driver
+        builder = builder.master(f"local[{cpus}]").config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1)
+        )
     spark = builder.getOrCreate()
     # getOrCreate IGNORES builder configs when a session already lives
     # in this process; shuffle.partitions is runtime-settable, so apply

@@ -1,8 +1,11 @@
 """Count the shell processes a streaming micro-batch forks.
 
 Without native ``libhadoop``, Hadoop's local filesystem forks ``chmod``
-(setPermission) and, under ``FileContext``, ``readlink``.  A fresh JVM
-gets logging shims for both first on ``PATH``; a backlog drains through
+(setPermission) and, under ``FileContext``, ``readlink``; it can also
+fork ``ls``, ``stat``, ``df``, ``id``, ``groups`` or ``bash`` (file
+status, disk usage, user groups, shell commands).  A fresh JVM gets
+logging shims for all of them first on ``PATH``, so a new fork source
+shows up in the per-command table; a backlog drains through
 the ``stream_processor``-shaped query (file source -> running total ->
 idempotent parquet sink), then 10 single-file micro-batches are fed and
 their forks per batch printed by command and by checkpoint subdirectory
@@ -27,7 +30,7 @@ shims, log = f"{root}/shims", f"{root}/forks.log"
 watch, ckpt, out = (f"{root}/{d}" for d in ("in", "ckpt", "out"))
 for d in (shims, watch):
     os.makedirs(d)
-for cmd in ("chmod", "readlink"):
+for cmd in ("chmod", "readlink", "ls", "stat", "bash", "df", "id", "groups"):
     with open(f"{shims}/{cmd}", "w") as fh:
         fh.write(f'#!/bin/sh\necho "{cmd} $*" >> {log}\nexec {shutil.which(cmd)} "$@"\n')
     os.chmod(f"{shims}/{cmd}", 0o755)

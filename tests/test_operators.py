@@ -598,6 +598,20 @@ def test_semdedup_assignment_ties_and_hof_parity(spark):
     assert by_cid[1]["n_members"] == 2
 
 
+def test_semdedup_centroid_collect_is_bounded(spark):
+    """The centroid collect takes at most n_clusters + 1 rows and raises
+    past n_clusters: a duplicated init id would otherwise build a
+    centroid matrix with a repeated cid and no error."""
+    from confluent_kafka_streams_examples_spark.operators.similarity import (
+        semdedup,
+    )
+
+    rows = [(0, [0.0, 0.0]), (0, [1.0, 0.0]), (1, [2.0, 0.0]), (2, [1.0, 5.0])]
+    df = spark.createDataFrame(rows, ["vec_id", "v"])
+    with pytest.raises(ValueError, match="n_clusters=2"):
+        semdedup(df, n_clusters=2, threshold=2.0)
+
+
 def test_fan_out_small_scan_metadata_guard(spark, tmp_path):
     """fan_out_small_scan (session.py): repartitions the narrow frame
     when file metadata says the scan cannot feed the cores, and is a

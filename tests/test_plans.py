@@ -327,6 +327,23 @@ def test_ivf_pruned_scan_carries_partition_filters(spark):
     assert probed and len(probed) < len(on_disk), (probed, on_disk)
 
 
+def test_ivf_router_collect_is_bounded(spark, tmp_path):
+    """The IVF router collect takes at most 2 rows per query vector
+    (ids 0..4) plus one, and raises past that: with ids shifted below
+    zero the query set ``vec_id < 5`` holds 15 vectors, whose 30
+    routing rows an unbounded collect would take without complaint."""
+    import os
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    emb = pq.read_table(os.path.join(SF_SMOKE, "embeddings.parquet"))
+    emb = emb.set_column(0, "vec_id", pc.subtract(emb["vec_id"], 10))
+    pq.write_table(emb, str(tmp_path / "embeddings.parquet"))
+    with pytest.raises(ValueError, match="more than 10 rows"):
+        QUERIES["similarity_ivf_pruned"](spark, str(tmp_path))
+
+
 def test_ivf_dynamic_scan_prunes_via_dpp(spark):
     """similarity_ivf_dynamic: the index scan must carry a DYNAMIC
     partition-pruning filter on list_id (the router join's broadcast is

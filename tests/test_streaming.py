@@ -315,6 +315,80 @@ def test_checkpoint_manager_is_filesystem_based(spark, tmp_path):
     assert manager.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
 
 
+def _listing_jobs(sc, group: str) -> list[str]:
+    """Descriptions of the jobs in ``group`` that run Spark's parallel
+    file listing ("Listing leaf files and directories for N paths", one
+    task per path).  Waits until the group's jobs have all ended, so the
+    status store has seen every job the group ran."""
+    import time as _time
+
+    tracker = sc.statusTracker()
+    deadline = _time.monotonic() + 30
+    while True:
+        jobs = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group)]
+        if jobs and all(j and j.status == "SUCCEEDED" for j in jobs):
+            break
+        assert _time.monotonic() < deadline, f"jobs of {group} did not end: {jobs}"
+        _time.sleep(0.1)
+    # PySpark's status tracker has no job descriptions; the JVM's
+    # status store does
+    store = sc._jsc.sc().statusStore()
+    descs = [store.job(j.jobId).description() for j in jobs]
+    return [
+        d.get() for d in descs
+        if d.isDefined() and d.get().startswith("Listing leaf files")
+    ]
+
+
+def test_file_listing_launches_no_spark_job(spark, tmp_path):
+    """Under a local master a path list is listed on the driver: neither
+    a 40-file micro-batch nor a 40-path batch read launches Spark's
+    parallel "Listing leaf files" job, which the default threshold of
+    32 paths would (see the session module docstring)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from confluent_kafka_streams_examples_spark.sources.files import file_stream
+
+    src = tmp_path / "src"
+    src.mkdir()
+    paths = []
+    for i in range(40):
+        # written without Spark, so the only jobs are the reads below
+        paths.append(str(src / f"f{i:02d}.parquet"))
+        pq.write_table(
+            pa.table({
+                "key": [f"k{i}"],
+                "value": [float(i)],
+                "ts": pa.array([ts(i)], pa.timestamp("us")),
+            }),
+            paths[-1],
+        )
+    sc = spark.sparkContext
+
+    q = (
+        file_stream(spark, str(src), EVENT_SCHEMA)
+        .writeStream.format("noop")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        assert q.lastProgress["numInputRows"] == 40
+    finally:
+        q.stop()
+    assert _listing_jobs(sc, str(q.runId)) == []
+
+    group = f"batch-read-{uuid.uuid4().hex[:8]}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        df = spark.read.parquet(*paths)
+        assert df.count() == 40
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert _listing_jobs(sc, group) == []
+
+
 def test_running_total_path_switch_needs_fresh_checkpoint(spark, tmp_path):
     """The timer-free aggregate and the punctuator fold keep different
     state, so turning emit_every_ms on over an aggregate checkpoint
@@ -570,6 +644,20 @@ def test_streaming_bench_pipelines_construct(spark, tmp_path):
         df, mode = factory(spark, left, right)
         assert df.isStreaming, name
         assert mode in ("append", "update"), (name, mode)
+
+
+def test_streaming_bench_rejects_unknown_pillar():
+    """A pillar name on bench_streaming's command line that names no
+    pipeline exits non-zero before any session starts, listing the
+    valid names."""
+    import importlib
+
+    bs = importlib.import_module("bench_streaming")
+    with pytest.raises(SystemExit) as exc:
+        bs.main(["tumbling_agg", "no_such_pillar"])
+    msg = str(exc.value.code)
+    assert "no_such_pillar" in msg
+    assert all(name in msg for name, _, _ in bs.PIPELINES)
 
 
 def test_state_probe_pillars_construct(spark, tmp_path):
