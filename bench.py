@@ -5,6 +5,12 @@ JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 
 Each query executes to completion via the noop sink (full computation,
 no driver collect, no result materialization cost).
+
+Usage: ``python bench.py [QUERY ...]`` — query names on the command
+line run only those queries (same JSON line, ``value`` the total over
+them; the committed BENCH_DETAIL.json is written only by a full run);
+none runs all.  An unknown name exits non-zero and lists the valid
+ones.
 """
 
 from __future__ import annotations
@@ -147,7 +153,14 @@ def adjudicate_host(start: dict, end: dict | None = None) -> tuple[bool, list[st
     return (len(reasons) > 0, reasons)
 
 
-def main() -> None:
+def main(argv: list[str]) -> None:
+    unknown = sorted(set(argv) - set(QUERIES))
+    if unknown:
+        sys.exit(
+            f"unknown query(s): {', '.join(unknown)}; "
+            f"valid: {', '.join(sorted(QUERIES))}"
+        )
+    names = sorted(set(argv)) if argv else sorted(QUERIES)
     # capture the host state BEFORE the JVM launches: an honest run sees
     # a near-idle host here, so a hot start marker is itself the verdict
     host_start = host_markers("start")
@@ -182,7 +195,7 @@ def main() -> None:
     # expected load at its timestamp = foreign contention, not a plan
     # regression.  Detail-file only; the stdout contract is unchanged.
     query_load: dict[str, list[float]] = {}
-    for name in sorted(QUERIES):
+    for name in names:
         best = -1.0
         for _ in range(reps):
             try:
@@ -224,27 +237,29 @@ def main() -> None:
     # full 80-query dict overflows that window (r1's line was truncated
     # into unparseability).  The stdout line carries the total plus as
     # many of the SLOWEST queries as fit the window; BENCH_DETAIL.json
-    # has everything.
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           "BENCH_DETAIL.json"), "w") as fh:
-        json.dump(
-            {
-                "metric": "total_query_wall_seconds",
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-                "sf": sf,
-                "reps": reps,
-                "n_queries": len(timings),
-                "host": {"start": host_start, "end": host_end},
-                "query_loadavg_1m": query_load,
-                "contaminated": contaminated,
-                "contamination_reasons": reasons,
-            },
-            fh,
-            indent=1,
-            sort_keys=True,
-        )
+    # has everything.  A subset run leaves the full run's file alone.
+    detail = None if argv else "BENCH_DETAIL.json"
+    if detail:
+        path = os.path.join(os.path.dirname(os.path.abspath(__file__)), detail)
+        with open(path, "w") as fh:
+            json.dump(
+                {
+                    "metric": "total_query_wall_seconds",
+                    "value": total,
+                    "unit": "sec",
+                    "queries": timings,
+                    "sf": sf,
+                    "reps": reps,
+                    "n_queries": len(timings),
+                    "host": {"start": host_start, "end": host_end},
+                    "query_loadavg_1m": query_load,
+                    "contaminated": contaminated,
+                    "contamination_reasons": reasons,
+                },
+                fh,
+                indent=1,
+                sort_keys=True,
+            )
 
     budget = 1900  # stay under the 2000-char stdout capture window
     summary = {
@@ -254,7 +269,7 @@ def main() -> None:
         "queries": {},
         "sf": sf,
         "n_queries": len(timings),
-        "detail": "BENCH_DETAIL.json",
+        "detail": detail,
         "contaminated": contaminated,
     }
     if contaminated:
@@ -274,4 +289,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

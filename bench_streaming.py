@@ -292,11 +292,6 @@ def _p_neardup(spark, left, right):
     )
 
 
-#: one-time corpus signature artifact for the corpus-gate pillar,
-#: shared across warm + reps (path in /tmp, regenerated per process)
-_CORPUS_SIG_PATH: list[str] = []
-
-
 def _p_neardup_corpus(spark, left, right):
     # stream-static ingest gate: per-row signing + broadcast(batch) band
     # join against a STORED corpus signature artifact (40k docs = every
@@ -310,8 +305,11 @@ def _p_neardup_corpus(spark, left, right):
         neardup_vs_corpus_stream,
     )
 
-    if not _CORPUS_SIG_PATH:
-        path = tempfile.mkdtemp(prefix="ckse_corpus_sig_") + "/sig"
+    # the corpus signature table is written once next to the caller's
+    # input (warm + reps share one root), so whoever removes the input
+    # removes it too
+    path = os.path.join(os.path.dirname(os.path.abspath(left)), "corpus_sig")
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
         corpus = spark.range(0, N_ROWS + 1, 50).selectExpr(
             "id AS doc_id",
             "concat_ws(' ', transform(sequence(0, 9), i -> concat('w',"
@@ -320,8 +318,7 @@ def _p_neardup_corpus(spark, left, right):
         minhash_signatures(corpus, "doc_id", "text", 16, 3).write.mode(
             "overwrite"
         ).parquet(path)
-        _CORPUS_SIG_PATH.append(path)
-    corpus_sig = spark.read.parquet(_CORPUS_SIG_PATH[0])
+    corpus_sig = spark.read.parquet(path)
     src = _read(spark, left).selectExpr(
         "(unix_micros(ts) - 1704067200000000) div 100 AS doc_id",
         "concat_ws(' ', transform(sequence(0, 9), i -> concat('w',"

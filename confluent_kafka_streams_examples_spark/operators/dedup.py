@@ -495,6 +495,8 @@ def kept_shingle_lists(
     is appended to it, so an eager consumer (e.g. an artifact build)
     can unpersist them the moment the result is materialized.
     """
+    # kept: without it the artifact build behind dedup_containment takes
+    # 4.96 -> 5.06 s (sf0.1, 10 pairs)
     sh = shingle_hashes(df, id_col, text_col, n).persist(
         StorageLevel.MEMORY_AND_DISK
     )
@@ -520,7 +522,8 @@ def kept_shingle_lists(
         sh = sh.join(hot, "shingle", "left_anti")
     # rows are already distinct per (shingle, id), so collect_list (no
     # per-key set dedup) suffices; array_sort makes the i<j pair
-    # expansion downstream emit ordered pairs by construction
+    # expansion downstream emit ordered pairs by construction.  Kept
+    # pinned: without it the same build takes 5.44 -> 6.81 s (10 pairs)
     lists = (
         sh.groupBy("shingle")
         .agg(F.array_sort(F.collect_list(F.col(id_col))).alias("ids"))
@@ -648,15 +651,10 @@ def containment_pairs(
         counts = shared_shingle_counts(
             kept_shingle_lists(df, id_col, text_col, n, max_df), id_col
         )
-    # the direction pass references this subtree TWICE (fwd + rev), and
-    # Spark has no cross-reference CSE — persist the (pair, shared,
-    # sizes) table (one row per candidate pair, tiny next to the
-    # index build) so the shared-count shuffle runs once
-    both = counts.persist(StorageLevel.MEMORY_AND_DISK)
-    fwd = both.select(
+    fwd = counts.select(
         "id_a", "id_b", F.col("shared"), F.col("n_a").alias("n_small")
     )
-    rev = both.select(
+    rev = counts.select(
         F.col("id_b").alias("id_a"),
         F.col("id_a").alias("id_b"),
         F.col("shared"),
@@ -794,13 +792,14 @@ def minhash_lsh_pairs(
         sig = minhash_signatures(df, id_col, text_col, num_hashes, n)
     banded = band_signatures(sig, num_hashes, bands)
     if computed_here:
-        # materialize before the self-join: the 16-agg signature
-        # pipeline would otherwise run twice (once per join side).  A
-        # caller-provided ``sig`` is a STORED table (parquet artifact /
-        # registered view, possibly subset by a semi-join): its band
-        # projection re-runs cheaply per join side and Spark's exchange
-        # reuse dedups the probe side, so the persist's materialization
-        # job buys nothing (A/B at sf0.1: wash on wall clock,
+        # materialize before the self-join: without it
+        # neardup_verify_levenshtein takes 2.59 -> 3.09 s (sf0.1, 10
+        # pairs, 0 won by the uncached side).  A caller-provided
+        # ``sig`` is a STORED table (parquet artifact / registered
+        # view, possibly subset by a semi-join): its band projection
+        # re-runs cheaply per join side and Spark's exchange reuse
+        # dedups the probe side, so the persist's materialization job
+        # buys nothing (A/B at sf0.1: wash on wall clock,
         # OPTIMIZATION_r11.md) while pinning executor storage that a
         # 100 TB run wants for the join itself.
         banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
@@ -830,6 +829,9 @@ def incremental_minhash_pairs(
     """
     sig_new = minhash_signatures(new_docs, id_col, text_col, num_hashes, n)
     band_cols = [id_col, "band_idx", "band_sig"]
+    # kept: without it dedup_incremental_persisted reads 3.56 -> 4.06 s
+    # (bench.py, sf0.1, 10 pairs, 3 won uncached; in-process A/B 2.37 ->
+    # 2.31, 6/10) while dedup_incremental gains (2.01 -> 1.75, 10/10)
     banded_new = band_signatures(sig_new, num_hashes, bands).persist(
         StorageLevel.MEMORY_AND_DISK
     )
@@ -870,8 +872,9 @@ def minhash_estimate_pairs(
     The estimate is the fraction of agreeing signature components
     (E[match] = true Jaccard); pairs with fewer than ``min_matching``
     of ``num_hashes`` agreeing components are dropped.  Signatures are
-    computed ONCE (persisted) and reused for banding and verification,
-    so no candidate ever re-touches document text — at 100 TB the
+    computed ONCE (one signature shuffle, which banding and both
+    verification joins read through exchange reuse), so no candidate
+    ever re-touches document text — at 100 TB the
     signature table is ~1e-4 the corpus size and the whole cascade
     stage is joins on it alone.
 
@@ -880,9 +883,7 @@ def minhash_estimate_pairs(
     minhash_lsh_pairs) instead of shingling text here.
     """
     if sig is None:
-        sig = minhash_signatures(df, id_col, text_col, num_hashes, n).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+        sig = minhash_signatures(df, id_col, text_col, num_hashes, n)
     pairs = _band_pairs(band_signatures(sig, num_hashes, bands), id_col).distinct()
     sa = sig.select(
         F.col(id_col).alias("id_a"),
@@ -967,6 +968,7 @@ def simhash64_candidates(
     ``max_hamming`` > 3 weakens the guarantee (4 bands only cover
     distance 3); raise the band count for larger radii.
     """
+    # kept: without it dedup_simhash64 takes 2.30 -> 2.56 s (sf0.1, 10 pairs)
     fp = simhash64(df, id_col, text_col).persist(StorageLevel.MEMORY_AND_DISK)
     band_vals = [
         "sim_lo & 65535",

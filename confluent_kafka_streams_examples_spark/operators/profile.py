@@ -41,17 +41,22 @@ def canonical(col: Column) -> Column:
     return col.cast("string")
 
 
+def _stacked(df: DataFrame, cols: dict[str, Column]) -> DataFrame:
+    """(col_name, val): one row per (source row, column), stacked inside
+    the scan projection and fanned out when the scan is small."""
+    pairs: list[Column] = []
+    for name, col in cols.items():
+        pairs += [F.lit(name), col]
+    return fan_out_small_scan(
+        df, df.select(F.stack(F.lit(len(cols)), *pairs).alias("col_name", "val"))
+    )
+
+
 def _hashed_parts(df: DataFrame, cols: dict[str, Column]) -> DataFrame:
     """(col_name, j, tail): the stacked + md5-split register rows both
     the batch profiler and its streaming twin aggregate.  Nulls park
     in register -1 with a NULL tail (they carry the null count)."""
-    pairs: list[Column] = []
-    for name, col in cols.items():
-        pairs += [F.lit(name), col]
-    stacked = fan_out_small_scan(
-        df, df.select(F.stack(F.lit(len(cols)), *pairs).alias("col_name", "val"))
-    )
-    h = stacked.select("col_name", F.md5("val").alias("h"))
+    h = _stacked(df, cols).select("col_name", F.md5("val").alias("h"))
     return h.select(
         "col_name",
         F.when(F.col("h").isNull(), F.lit(-1))
@@ -95,6 +100,29 @@ def profile_table(df: DataFrame, cols: dict[str, Column]) -> DataFrame:
     return profile_from_registers(profile_registers(df, cols))
 
 
+def _hll_raw_est() -> list[Column]:
+    """(raw_est, zero_registers): the integer-exact raw HLL estimate and
+    empty-register count from a profile row's (S_present, n_present)."""
+    return [
+        F.expr(
+            f"CAST(CAST('{HLL_NUM}' AS DECIMAL(38,0))"
+            f" div (CAST({HLL_DEN} AS DECIMAL(38,0))"
+            f" * (coalesce(S_present, CAST(0 AS DECIMAL(38,0)))"
+            f" + CAST(({HLL_M} - n_present) AS DECIMAL(38,0))"
+            f" * CAST(shiftleft(CAST(1 AS BIGINT), 62) AS DECIMAL(38,0))))"
+            f" AS BIGINT)"
+        ).alias("raw_est"),
+        F.expr(f"CAST({HLL_M} - n_present AS BIGINT)").alias("zero_registers"),
+    ]
+
+
+def _hll_distinct_est() -> Column:
+    """The corrected distinct estimate over (raw_est, zero_registers)."""
+    return F.expr(hll_est_sql("raw_est", "zero_registers", "div")).alias(
+        "distinct_est"
+    )
+
+
 def profile_from_registers(lvl1: DataFrame) -> DataFrame:
     """Fold a (col_name, j, cnt, R) register table — the batch lvl1 or
     a streaming twin's final state — into the profile rows
@@ -120,23 +148,13 @@ def profile_from_registers(lvl1: DataFrame) -> DataFrame:
         "col_name",
         "n_rows",
         "n_null",
-        F.expr(
-            f"CAST(CAST('{HLL_NUM}' AS DECIMAL(38,0))"
-            f" div (CAST({HLL_DEN} AS DECIMAL(38,0))"
-            f" * (coalesce(S_present, CAST(0 AS DECIMAL(38,0)))"
-            f" + CAST(({HLL_M} - n_present) AS DECIMAL(38,0))"
-            f" * CAST(shiftleft(CAST(1 AS BIGINT), 62) AS DECIMAL(38,0))))"
-            f" AS BIGINT)"
-        ).alias("raw_est"),
-        F.expr(f"CAST({HLL_M} - n_present AS BIGINT)").alias("zero_registers"),
+        *_hll_raw_est(),
     )
     return raw.select(
         "col_name",
         "n_rows",
         "n_null",
-        F.expr(hll_est_sql("raw_est", "zero_registers", "div")).alias(
-            "distinct_est"
-        ),
+        _hll_distinct_est(),
         "zero_registers",
     )
 
@@ -228,13 +246,7 @@ def profile_table_extended(
     whose canonical form is not numeric (free text, JSON) report
     NULL, same contract as min_num/max_num.
     """
-    pairs: list[Column] = []
-    for name, col in cols.items():
-        pairs += [F.lit(name), col]
-    stacked = fan_out_small_scan(
-        df, df.select(F.stack(F.lit(len(cols)), *pairs).alias("col_name", "val"))
-    )
-    h = stacked.select(
+    h = _stacked(df, cols).select(
         "col_name",
         "val",
         F.md5("val").alias("h"),
@@ -407,15 +419,7 @@ def profile_table_extended(
         "col_name",
         "n_rows",
         "n_null",
-        F.expr(
-            f"CAST(CAST('{HLL_NUM}' AS DECIMAL(38,0))"
-            f" div (CAST({HLL_DEN} AS DECIMAL(38,0))"
-            f" * (coalesce(S_present, CAST(0 AS DECIMAL(38,0)))"
-            f" + CAST(({HLL_M} - n_present) AS DECIMAL(38,0))"
-            f" * CAST(shiftleft(CAST(1 AS BIGINT), 62) AS DECIMAL(38,0))))"
-            f" AS BIGINT)"
-        ).alias("raw_est"),
-        F.expr(f"CAST({HLL_M} - n_present AS BIGINT)").alias("zero_registers"),
+        *_hll_raw_est(),
         "min_num",
         "max_num",
         # DECIMAL(38,0) guard: sum_len x 100 as BIGINT would overflow
@@ -451,9 +455,7 @@ def profile_table_extended(
         "col_name",
         "n_rows",
         "n_null",
-        F.expr(hll_est_sql("raw_est", "zero_registers", "div")).alias(
-            "distinct_est"
-        ),
+        _hll_distinct_est(),
         "zero_registers",
         "min_num",
         "max_num",

@@ -231,7 +231,6 @@ def semdedup(
     """
     import numpy as np
 
-    from pyspark.storagelevel import StorageLevel
     from pyspark.sql.types import LongType
 
     # bounded driver collect: k centroid rows, k capped by the same
@@ -281,9 +280,6 @@ def semdedup(
     assigned = vecs.select(id_col, vec_col).join(
         best.hint("shuffle_hash"), id_col
     )
-    # referenced twice (pair generation + the summary) and Spark has no
-    # cross-reference CSE — persist so assignment runs one scan, not two
-    assigned = assigned.persist(StorageLevel.MEMORY_AND_DISK)
     pairs = cosine_pairs_partitioned(
         assigned,
         part_col="cid",

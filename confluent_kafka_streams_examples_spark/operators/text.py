@@ -181,24 +181,17 @@ def unigram_lm_scores(
     not corpus length; the corpus total joins back as a broadcast
     1-rower; the logprob table joins on the token key (AQE broadcasts
     it while the vocabulary fits, falls back to a hash join keyed on
-    the token when it doesn't).  ``tc`` is persisted because three
-    subtrees reference it (per-doc scores, vocabulary, corpus total)
-    and Spark has no cross-reference CSE — without the persist the
-    corpus would be read and tokenized three times.  No pre-spread:
-    the explode feeds a map-side partial count whose output is
-    vocabulary-sized, so a parallelizing shuffle of raw text costs
-    more than the single-threaded stage it saves (A/B-measured 0.65s
-    vs 0.48s at sf0.1)."""
-    from pyspark.storagelevel import StorageLevel
-
+    the token when it doesn't).  ``tc`` ends in a shuffle, so its
+    three consumers (per-doc scores, vocabulary, corpus total) read
+    one exchange (exchange reuse): the corpus is read and tokenized
+    once, uncached.  No pre-spread: the explode feeds a map-side
+    partial count whose output is vocabulary-sized, so a parallelizing
+    shuffle of raw text costs more than the single-threaded stage it
+    saves (A/B-measured 0.65s vs 0.48s at sf0.1)."""
     tok = df.select(
         F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("token")
     )
-    tc = (
-        tok.groupBy(id_col, "token")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    tc = tok.groupBy(id_col, "token").agg(F.count(F.lit(1)).alias("c"))
     vocab = tc.groupBy("token").agg(F.sum("c").alias("cw"))
     total = vocab.agg(F.sum("cw").alias("total"))
     logp = vocab.crossJoin(F.broadcast(total)).select(
@@ -437,10 +430,9 @@ def bpe_merge_rounds(
     is a 1-row frame (TakeOrdered over the pair-count aggregate),
     cross-joined (broadcast, 1 row) into the next round's token
     rewrite — the same single-row-broadcast shape as the IVF router.
-    The 1-row winners are persisted so evaluating round r does not
-    cascade a re-aggregation of rounds 1..r-1 (without it the unrolled
-    plan re-derives each winner once per consumer); the corpus itself
-    is never cached — each round's count is one scan + one
+    Nothing is cached: both consumers of a winner (the merge table and
+    the next round's rewrite) read its round's pair-count shuffle
+    through exchange reuse — each round's count is one scan + one
     (pair, count) partial-agg shuffle whose volume tracks pair
     VOCABULARY, not corpus length, exactly like bpe_pair_counts.
 
@@ -475,7 +467,6 @@ def bpe_merge_rounds(
                 F.split_part(F.col("pair"), F.lit(" "), F.lit(1)).alias("__l"),
                 F.split_part(F.col("pair"), F.lit(" "), F.lit(2)).alias("__r"),
             )
-            .persist()
         )
         outs.append(top.select("round", "pair", "n"))
         cur = cur.crossJoin(F.broadcast(top.select("__l", "__r"))).select(

@@ -363,7 +363,8 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets geometrically.  The projections are JVM-side zip_with/
     aggregate folds (no Python, no collect)."""
     emb = load_table(spark, "embeddings", sf_dir)
-    # materialize before the self-join (projections would run twice)
+    # materialize before the self-join: without it this query takes
+    # 1.88 -> 2.20 s (sf0.1, 10 pairs)
     from pyspark.storagelevel import StorageLevel
 
     base = _norm_bucket_base(emb).persist(StorageLevel.MEMORY_AND_DISK)

@@ -550,11 +550,10 @@ def dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     production.  One row out; both pair sets reduce to counts via
     broadcast-joinable frames.  Both sides read materialized artifacts
     (the shared-count table for ground truth, the signature store for
-    the LSH side), and both pair tables are persisted: each is
-    referenced twice (the hit join and its own count) and Spark has no
-    cross-reference CSE."""
-    from pyspark.storagelevel import StorageLevel
-
+    the LSH side).  Each pair table is referenced twice (the hit join
+    and its own count) and neither is cached: the LSH side's second
+    reference reads its pair-dedup shuffle through exchange reuse, and
+    the truth side re-scans the small shared-count artifact."""
     truth = (
         dedup.ngram_jaccard_pairs(
             None, "doc_id", "text", n=3, threshold=0.4,
@@ -562,12 +561,11 @@ def dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             counts=shared_counts_table(spark, sf_dir),
         )
         .select("id_a", "id_b")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     cand = dedup.minhash_lsh_pairs(
         None, "doc_id", "text", num_hashes=_MH, bands=_BANDS,
         sig=minhash_signature_table(spark, sf_dir),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    )
     hit = truth.join(cand, ["id_a", "id_b"])
     counts = (
         truth.agg(F.count(F.lit(1)).cast("long").alias("n_truth"))

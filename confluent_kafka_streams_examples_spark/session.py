@@ -272,9 +272,11 @@ def fan_out_small_scan(df: DataFrame, narrow: DataFrame) -> DataFrame:
 def release_caches(spark: SparkSession) -> None:
     """Registry-level cache teardown.
 
-    Several queries ``persist()`` an intermediate (MinHash signatures,
-    IVF bucket assignments, shared-shingle counts, ...) because the plan
-    reuses it on two branches.  The persist is scoped to the QUERY, not
+    Several queries ``persist()`` an intermediate their plan reads on
+    two branches (banded MinHash signatures, SimHash fingerprints,
+    normalized embedding vectors, per-source shingle sets, the cleaning
+    pipeline's keep-ID sets) where caching measured faster than exchange
+    reuse.  The persist is scoped to the QUERY, not
     the session: a long-lived session running many registered queries
     must release those blocks after each result is consumed, or the
     executor storage pool accumulates one cache per persisting query.

@@ -14,6 +14,8 @@ import multiprocessing
 import os
 import time
 
+import pytest
+
 import bench
 
 
@@ -97,3 +99,34 @@ def test_descendant_walk():
     if ppid > 1:
         assert bench._is_descendant_of(me, ppid)
     assert not bench._is_descendant_of(1, me)
+
+
+def test_bench_rejects_unknown_query():
+    """A query name on bench.py's command line that names no registered
+    query exits non-zero before any session starts, listing the valid
+    names."""
+    with pytest.raises(SystemExit) as exc:
+        bench.main(["dedup_exact", "no_such_query"])
+    msg = str(exc.value.code)
+    assert "no_such_query" in msg
+    assert all(name in msg for name in bench.QUERIES)
+
+
+def test_bench_subset_keeps_detail_file(spark, monkeypatch, capsys):
+    """A subset run prints the usual JSON line for just the named
+    queries and leaves the full run's BENCH_DETAIL.json untouched."""
+    import json
+
+    from tests.conftest import SF_SMOKE
+
+    detail = os.path.join(os.path.dirname(bench.__file__), "BENCH_DETAIL.json")
+    before = open(detail, "rb").read() if os.path.exists(detail) else None
+    monkeypatch.setattr(bench, "SF_DIR", SF_SMOKE)
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_REPS", "1")
+    bench.main(["dedup_exact", "ktable_latest"])
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out["n_queries"] == 2
+    assert set(out["queries"]) == {"dedup_exact", "ktable_latest"}
+    assert out["detail"] is None
+    after = open(detail, "rb").read() if os.path.exists(detail) else None
+    assert after == before

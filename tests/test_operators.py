@@ -456,6 +456,32 @@ def test_release_caches_drains_query_persists(spark, sf_dir):
     assert cm.isEmpty()
 
 
+@pytest.mark.parametrize(
+    "name",
+    [
+        "dedup_containment",
+        "semdedup_prune",
+        "semdedup_prune_scaled",
+        "lm_unigram_score",
+        "bpe_merge_rounds",
+        "dedup_lsh_recall_eval",
+    ],
+)
+def test_queries_without_persist_leave_no_cache(spark, sf_dir, name):
+    """These queries reuse a shared subtree through Spark's exchange
+    reuse, not a cache: run back to back with no release_caches, they
+    leave the CacheManager empty."""
+    from confluent_kafka_streams_examples_spark.queries import QUERIES
+    from confluent_kafka_streams_examples_spark.session import release_caches
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    release_caches(spark)  # start clean regardless of earlier tests
+    for _ in range(2):
+        df = QUERIES[name](spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
+    assert cm.isEmpty(), name
+
+
 def test_pack_greedy_shards_knob(spark):
     """The packing shard count is an operator argument: the window
     partitioning (md5 bucket) follows shards= directly, and the default

@@ -640,10 +640,22 @@ def test_streaming_bench_pipelines_construct(spark, tmp_path):
         spark.createDataFrame(rows, "key string, value double").selectExpr(
             "key", "value", "timestamp'2024-01-01 00:00:00' + make_interval(0,0,0,0,0,0,value) AS ts"
         ).write.mode("overwrite").parquet(path)
+    import glob
+    import os
+    import tempfile
+
+    def corpus_sig_dirs():
+        pattern = os.path.join(tempfile.gettempdir(), "ckse_corpus_sig_*")
+        return set(glob.glob(pattern))
+
+    before = corpus_sig_dirs()
     for name, factory, _rows in bs.PIPELINES:
         df, mode = factory(spark, left, right)
         assert df.isStreaming, name
         assert mode in ("append", "update"), (name, mode)
+    # the corpus-gate pillar's signature table lives under the caller's
+    # input root, so removing the input removes it
+    assert corpus_sig_dirs() == before
 
 
 def test_streaming_bench_rejects_unknown_pillar():
