@@ -12,15 +12,35 @@ Two tiers:
   one numpy matmul per partition (Arrow-batched, BLAS-backed): the scale
   path for all-pairs similarity, since cost is sum of per-bucket n_i^2,
   not global n^2, and buckets parallelize across executors.
+
+The vector-search queries (LSH and IVF probes, their recall evals, the
+PQ recall eval) compose one set of batch expressions over a
+``(vec_id, v, nrm)`` frame (`vector_base`): the query batch
+(`query_vectors`), the per-query cosine top-k (`cosine_topk_per_query`)
+and the recall@k aggregate (`recall_at_k`).  The IVF tier adds the
+centroid codebook (`centroid_means`, also the k-means recompute step),
+the rounded vector-to-centroid distances (`ivf_distances`), their
+argmin (`ivf_nearest`), the inverted-list assignment (`ivf_assign`)
+and the router that picks each query's NPROBE nearest lists
+(`ivf_route`).
 """
 
 from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+
+from confluent_kafka_streams_examples_spark.functions.scalar import round_det
+
+#: every vector-search query scores the same batch: rows vec_id < N_QUERIES
+N_QUERIES = 5
+#: neighbours kept per query, and the k of recall@k
+TOP_K = 3
+#: inverted lists an IVF query searches
+NPROBE = 2
 
 
 def _dot(a, b):
@@ -136,6 +156,145 @@ def cosine_topk_batch(
         scored.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= k)
         .drop("_rn")
+    )
+
+
+def vector_base(emb: DataFrame) -> DataFrame:
+    """(vec_id, v, nrm): the embeddings as double vectors with their L2
+    norm, computed once and reused by every comparison."""
+    v = F.col("embedding").cast("array<double>")
+    return emb.select(F.col("vec_id"), v.alias("v")).withColumn(
+        "nrm", F.sqrt(_dot(F.col("v"), F.col("v")))
+    )
+
+
+def query_vectors(base: DataFrame, *extra: Column | str) -> DataFrame:
+    """(query_id, qv, qnrm, *extra): the query batch — the rows
+    vec_id < N_QUERIES of a `vector_base` frame — renamed so it can be
+    broadcast against the corpus side of the same frame."""
+    return base.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("v").alias("qv"),
+        F.col("nrm").alias("qnrm"),
+        *extra,
+    )
+
+
+def cosine_topk_per_query(pairs: DataFrame) -> DataFrame:
+    """(query_id, vec_id, cos_sim): the TOP_K candidates nearest each
+    query.  ``pairs`` holds candidate rows (vec_id, v, nrm) next to
+    their query's (query_id, qv, qnrm).
+
+    Deterministic like every oracle it is checked against: a query
+    never matches itself, the cosine is rounded to 6 dp and ties break
+    on the smaller vec_id.  The rank-limit window plans as
+    WindowGroupLimit, so each partition keeps its local top-k per query
+    before the shuffle."""
+    cos = F.round(
+        _dot(F.col("v"), F.col("qv")) / (F.col("nrm") * F.col("qnrm")), 6
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos_sim").desc(), F.col("vec_id")
+    )
+    return (
+        pairs.filter(F.col("vec_id") != F.col("query_id"))
+        .withColumn("cos_sim", cos)
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= TOP_K)
+        .select("query_id", "vec_id", "cos_sim")
+    )
+
+
+def recall_at_k(truth: DataFrame, found: DataFrame) -> DataFrame:
+    """(query_id, hits, recall_at_<TOP_K>): how many of each query's
+    TOP_K true neighbours (``truth``) the approximate top-k (``found``)
+    returned; both carry (query_id, vec_id)."""
+    hit = found.select("query_id", "vec_id", F.lit(1).alias("_hit"))
+    return (
+        truth.join(hit, ["query_id", "vec_id"], "left")
+        .groupBy("query_id")
+        .agg(
+            F.count("_hit").cast("bigint").alias("hits"),
+            round_det(F.count("_hit") / F.lit(float(TOP_K)), 4).alias(
+                f"recall_at_{TOP_K}"
+            ),
+        )
+    )
+
+
+def centroid_means(df: DataFrame, key: str, vec: Column | str, out: str) -> DataFrame:
+    """(key, out): the per-dimension mean vector of each ``key`` group,
+    every component rounded to 6 dp so a centroid is the same double in
+    every engine and after a parquet roundtrip.  posexplode makes the
+    mean an ordinary partial-aggregated groupBy: vectors never shuffle,
+    only (key, dim, partial-sum) triples do.  Shared by the IVF
+    codebook and the k-means recompute step."""
+    return (
+        df.select(key, F.posexplode(vec).alias("pos", "val"))
+        .groupBy(key, "pos")
+        .agg(round_det(F.avg("val"), 6).alias("c"))
+        .groupBy(key)
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "c"))), lambda x: x["c"]
+            ).alias(out)
+        )
+    )
+
+
+def ivf_distances(base: DataFrame, cent: DataFrame) -> DataFrame:
+    """(vec_id, label, d2): rounded squared distance of every vector of
+    a `vector_base` frame to every centroid of a (label, cv) codebook
+    (k-row broadcast product).  round_det(6) BEFORE any argmin keeps
+    the assignment reproducible across engines and summation orders."""
+    d2 = round_det(
+        F.aggregate(
+            F.zip_with(F.col("v"), F.col("cv"), lambda x, y: (x - y) * (x - y)),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        ),
+        6,
+    )
+    return (
+        base.select("vec_id", "v")
+        .join(F.broadcast(cent), F.lit(True))
+        .select("vec_id", "label", d2.alias("d2"))
+    )
+
+
+def ivf_nearest(dist: DataFrame) -> DataFrame:
+    """(vec_id, label): each vector's nearest centroid, ties to the
+    smaller label — a hash aggregate over (d2, label) structs, so the
+    k distances per vector collapse map-side."""
+    return (
+        dist.groupBy("vec_id")
+        .agg(F.min(F.struct("d2", "label")).alias("m"))
+        .select("vec_id", F.col("m.label").alias("label"))
+    )
+
+
+def ivf_assign(base: DataFrame, cent: DataFrame) -> DataFrame:
+    """(vec_id, v, nrm, list_id): the inverted lists — every vector of
+    a `vector_base` frame filed under its nearest centroid."""
+    return (
+        ivf_nearest(ivf_distances(base, cent))
+        .join(base.select("vec_id", "v", "nrm"), "vec_id")
+        .withColumnRenamed("label", "list_id")
+    )
+
+
+def ivf_route(dist: DataFrame) -> DataFrame:
+    """(query_id, list_id): the router — the NPROBE lists nearest each
+    query vector, from `ivf_distances` rows (query vectors are the rows
+    vec_id < N_QUERIES).  Q x NPROBE rows, small enough to broadcast
+    into the probe."""
+    wq = Window.partitionBy("query_id").orderBy("d2", "label")
+    return (
+        dist.filter(F.col("vec_id") < N_QUERIES)
+        .select(F.col("vec_id").alias("query_id"), "label", "d2")
+        .withColumn("crn", F.row_number().over(wq))
+        .filter(F.col("crn") <= NPROBE)
+        .select("query_id", F.col("label").alias("list_id"))
     )
 
 
@@ -271,12 +430,15 @@ def semdedup(
                 {id_col: pdf[id_col].to_numpy(), "cid": cids[j]}
             )
 
+    # the non-null filter is the one the pair-side join infers: with it
+    # written here both consumers of ``best`` plan the same subtree and
+    # share one exchange, so the assignment runs once
     best = vecs.select(id_col, vec_col).mapInPandas(
         assign_batches,
         schema=StructType(
             [StructField(id_col, LongType()), StructField("cid", LongType())]
         ),
-    )
+    ).filter(F.col(id_col).isNotNull())
     assigned = vecs.select(id_col, vec_col).join(
         best.hint("shuffle_hash"), id_col
     )
@@ -288,8 +450,9 @@ def semdedup(
         threshold=threshold,
     )
     pruned = pairs.select(F.col("vec_b").alias(id_col)).distinct()
+    # the summary needs only (id, cid), one row per vector: ``best``
     return (
-        assigned.join(pruned.withColumn("_p", F.lit(1)), id_col, "left")
+        best.join(pruned.withColumn("_p", F.lit(1)), id_col, "left")
         .groupBy("cid")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_members"),

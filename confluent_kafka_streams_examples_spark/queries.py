@@ -717,23 +717,24 @@ _VERIFY_FIRST = [
     "ngram_novelty_scores", "doc_winnow_fingerprints",
     "semdedup_prune_scaled", "semdedup_prune", "events_profile",
     "bpe_merge_rounds", "events_profile_extended", "lm_unigram_score",
+    "similarity_ann_lsh", "dedup_embedding_cosine", "ann_recall_eval",
+    "similarity_ivf_probe", "embedding_kmeans_fixed",
     # Tail: oldest green first.
-    "corpus_chunk_documents", "dedup_simhash64", "similarity_ann_lsh",
+    "hybrid_search", "corpus_chunk_documents", "dedup_simhash64",
     "sketch_hll_distinct", "topk_per_key", "event_gaps",
     "stream_stream_outer_join", "ktable_latest", "text_stats",
-    "large_volume_orders", "pack_sequences", "dedup_embedding_cosine",
-    "ann_recall_eval", "sketch_hll_eval", "events_json_analytics",
-    "user_retention_cohorts", "stream_stream_window_join",
+    "large_volume_orders", "similarity_topk", "pack_sequences",
     # Past the 50-entry window from here: these stay green on
     # unchanged bodies and lead the next round's rotation.
+    "similarity_topk_batch", "sketch_hll_eval", "events_json_analytics",
+    "user_retention_cohorts", "stream_stream_window_join",
     "ktable_filter_extract", "corpus_shard_export", "dedup_simhash",
-    "similarity_ivf_probe", "embedding_kmeans_fixed", "dedup_cdc_chunks",
-    "rollup_pricing", "market_share", "hybrid_search", "lang_profile",
+    "dedup_cdc_chunks", "rollup_pricing", "market_share", "lang_profile",
     "cube_order_priority", "basic_pipeline", "product_type_profit",
-    "similarity_topk", "lang_id_heuristic", "setops_users",
-    "windowed_session", "stream_table_join", "forecast_revenue_change",
-    "important_part_value", "corpus_mixture_sample",
-    "dedup_bloom_prefilter", "similarity_pairs_label", "token_frequencies",
+    "lang_id_heuristic", "setops_users", "windowed_session",
+    "stream_table_join", "forecast_revenue_change", "important_part_value",
+    "corpus_mixture_sample", "dedup_bloom_prefilter",
+    "similarity_pairs_label", "token_frequencies",
     "distinct_parts_per_supplier", "late_shipment_priority_counts",
     "customer_order_distribution", "promo_revenue", "top_supplier",
     "part_supplier_counts", "small_quantity_revenue",
@@ -750,15 +751,14 @@ _VERIFY_FIRST = [
     "local_supplier_volume", "multimodal_features", "asof_join",
     "sql_interface", "corpus_mixture_drift", "pivot_event_counts",
     "vocab_coverage", "user_sessions", "primary_supplier_per_part",
-    "corpus_split_assignment", "sample_n_per_group",
-    "similarity_topk_batch", "agg_running_total", "windowed_hopping",
-    "late_ship_priority", "corpus_stratified_sample", "anti_join_users",
-    "skewed_event_rollup", "dedup_exact_normalized", "json_props_extract",
-    "funnel_conversion", "nation_pair_volume", "semi_join_parts",
-    "events_concurrent_degree_salted", "embedding_quantize",
-    "agg_pricing_summary", "user_running_value", "returned_item_customers",
-    "pii_scrub", "stream_stream_left_join", "events_concurrent_degree",
-    "quality_histogram_threshold",
+    "corpus_split_assignment", "sample_n_per_group", "agg_running_total",
+    "windowed_hopping", "late_ship_priority", "corpus_stratified_sample",
+    "anti_join_users", "skewed_event_rollup", "dedup_exact_normalized",
+    "json_props_extract", "funnel_conversion", "nation_pair_volume",
+    "semi_join_parts", "events_concurrent_degree_salted",
+    "embedding_quantize", "agg_pricing_summary", "user_running_value",
+    "returned_item_customers", "pii_scrub", "stream_stream_left_join",
+    "events_concurrent_degree", "quality_histogram_threshold",
 ]
 
 

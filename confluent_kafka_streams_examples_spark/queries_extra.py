@@ -16,6 +16,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from confluent_kafka_streams_examples_spark.functions.scalar import epoch_us
+from confluent_kafka_streams_examples_spark.operators import similarity
+from confluent_kafka_streams_examples_spark.operators.similarity import _dot
 from confluent_kafka_streams_examples_spark.queries import query
 from confluent_kafka_streams_examples_spark.session import fan_out_small_scan, load_table
 
@@ -306,13 +308,6 @@ _BUCKET_SQL = " || ".join(
 )
 
 
-def _dot(a, b) -> F.Column:
-    """JVM-side dot product: zip_with + aggregate fold (no Python)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-
-
 def _norm_bucket_base(emb: DataFrame) -> DataFrame:
     """(vec_id, v, nrm, bucket): normalized vector + 4-bit hyperplane
     LSH bucket — shared by the near-dup and ANN queries.
@@ -324,10 +319,6 @@ def _norm_bucket_base(emb: DataFrame) -> DataFrame:
     ``1.0D`` literals pin DoubleType (bare ``0.0`` parses as DECIMAL
     in SQL), so the fold arithmetic is bit-identical to the previous
     ``F.lit(0.0)`` form."""
-    v = F.col("embedding").cast("array<double>")
-    base = emb.select(F.col("vec_id"), v.alias("v")).withColumn(
-        "nrm", F.sqrt(_dot(F.col("v"), F.col("v")))
-    )
     bits = ", ".join(
         "CASE WHEN aggregate(zip_with(v, array("
         + ", ".join(f"{s:.1f}D" for s in _plane_signs(p))
@@ -335,7 +326,9 @@ def _norm_bucket_base(emb: DataFrame) -> DataFrame:
         " THEN '1' ELSE '0' END"
         for p in range(_PLANES)
     )
-    return base.withColumn("bucket", F.expr(f"concat({bits})"))
+    return similarity.vector_base(emb).withColumn(
+        "bucket", F.expr(f"concat({bits})")
+    )
 
 
 @query(
@@ -377,15 +370,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"),
         F.col("nrm").alias("nb"), "bucket",
     )
-    cos = F.round(
-        F.aggregate(
-            F.zip_with(F.col("va"), F.col("vb"), lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        / (F.col("na") * F.col("nb")),
-        6,
-    )
+    cos = F.round(_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6)
     return (
         a.join(b, "bucket")
         .filter(F.col("vec_a") < F.col("vec_b"))
@@ -578,27 +563,9 @@ def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     — at 100 TB the corpus side is bucket-partitioned parquet, so a
     probe touches one partition, not the table.  Recall is tunable with
     more planes (smaller buckets) or multi-probe (flip one bit)."""
-    emb = load_table(spark, "embeddings", sf_dir)
-    base = _norm_bucket_base(emb)
-    q = base.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-        "bucket",
-    )
-    cand = base.select("vec_id", "v", "nrm", "bucket")
-    cos = F.round(_dot(F.col("v"), F.col("qv")) / (F.col("nrm") * F.col("qnrm")), 6)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id")
-    )
-    return (
-        cand.join(F.broadcast(q), "bucket")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("cos_sim", cos)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "vec_id", "cos_sim")
-    )
+    base = _norm_bucket_base(load_table(spark, "embeddings", sf_dir))
+    q = similarity.query_vectors(base, "bucket")
+    return similarity.cosine_topk_per_query(base.join(F.broadcast(q), "bucket"))
 
 
 # =====================================================================
@@ -641,46 +608,9 @@ def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivf_codebook(emb: DataFrame) -> DataFrame:
-    """(label, cv): per-label centroid codebook — k rows, broadcastable.
-    posexplode -> partial-agg mean per (label, dim): vectors never
-    shuffle, only (label, dim, partial-sum) triples do."""
-    from confluent_kafka_streams_examples_spark.functions.scalar import round_det
-
-    return (
-        emb.select(
-            "label",
-            F.posexplode(F.col("embedding").cast("array<double>")).alias("pos", "val"),
-        )
-        .groupBy("label", "pos")
-        .agg(round_det(F.avg("val"), 6).alias("c"))
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "c"))), lambda x: x["c"]
-            ).alias("cv")
-        )
-    )
-
-
-def _ivf_dist(base: DataFrame, cent: DataFrame) -> DataFrame:
-    """(vec_id, label, d2): rounded squared distance of every vector to
-    every centroid (k-row broadcast product).  argmin over it is the
-    inverted-list assignment; round_det(6) BEFORE any argmin keeps the
-    assignment reproducible across engines and summation orders."""
-    from confluent_kafka_streams_examples_spark.functions.scalar import round_det
-
-    d2 = round_det(
-        F.aggregate(
-            F.zip_with(F.col("v"), F.col("cv"), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        6,
-    )
-    return (
-        base.select("vec_id", "v")
-        .join(F.broadcast(cent), F.lit(True))
-        .select("vec_id", "label", d2.alias("d2"))
+    """(label, cv): per-label centroid codebook — k rows, broadcastable."""
+    return similarity.centroid_means(
+        emb, "label", F.col("embedding").cast("array<double>"), "cv"
     )
 
 
@@ -739,95 +669,111 @@ def similarity_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     are rounded (round_det 6) before the argmin so the assignment is
     reproducible across engines and summation orders."""
     emb = load_table(spark, "embeddings", sf_dir)
-    base = _norm_bucket_base(emb)
-    cent = _ivf_codebook(emb)
-    dist = _ivf_dist(base, cent)
-    assign = (
-        dist.groupBy("vec_id")
-        .agg(F.min(F.struct("d2", "label")).alias("m"))
-        .select("vec_id", F.col("m.label").alias("label"))
+    base = similarity.vector_base(emb)
+    # one distance frame feeds both the corpus assignment and the router
+    dist = similarity.ivf_distances(base, _ivf_codebook(emb))
+    lists = similarity.ivf_nearest(dist).join(
+        base.select("vec_id", "v", "nrm"), "vec_id"
     )
-    wq = Window.partitionBy("query_id").orderBy("d2", "label")
-    probe = (
-        dist.filter(F.col("vec_id") < 5)
-        .select(F.col("vec_id").alias("query_id"), "label", "d2")
-        .withColumn("crn", F.row_number().over(wq))
-        .filter(F.col("crn") <= 2)
-        .select("query_id", "label")
-    )
-    q = base.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-    return (
-        assign.join(base.select("vec_id", "v", "nrm"), "vec_id")
-        .join(F.broadcast(probe), "label")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .join(F.broadcast(q), "query_id")
-        .withColumn(
-            "cos_sim",
-            F.round(_dot(F.col("v"), F.col("qv")) / (F.col("nrm") * F.col("qnrm")), 6),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "vec_id", "cos_sim")
+    probe = similarity.ivf_route(dist).withColumnRenamed("list_id", "label")
+    q = similarity.query_vectors(base)
+    return similarity.cosine_topk_per_query(
+        lists.join(F.broadcast(probe), "label").join(F.broadcast(q), "query_id")
     )
 
 
-def _ivf_codebook_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+#: deterministic day-batch split (the sketch_hll_incremental pattern):
+#: vec_id % 10 == 0 is "today's append", the rest is the trained corpus
+_IVF_NEW_PRED = "vec_id % 10 = 0"
+
+
+def _ivf_training_set(spark: SparkSession, sf_dir: str, corpus90: bool) -> DataFrame:
+    """The embeddings a codebook and its index are built from: the
+    whole table, or with ``corpus90`` the corpus without today's
+    append."""
+    emb = load_table(spark, "embeddings", sf_dir)
+    return emb.filter(F.expr(f"NOT ({_IVF_NEW_PRED})")) if corpus90 else emb
+
+
+def _ivf_tag(kind: str, corpus90: bool) -> str:
+    """Artifact tag of the codebook or index (the artifact GC and
+    tests/test_plans.py read these names)."""
+    return f"ivf_{kind}|6dp" + ("|corpus90" if corpus90 else "")
+
+
+def _ivf_codebook_table(
+    spark: SparkSession, sf_dir: str, corpus90: bool = False
+) -> DataFrame:
     """Materialized k-row IVF codebook (label, cv) — built once per
     embeddings version; every router broadcast reads the store.  The
     centroids are 6-dp-rounded doubles, so the parquet roundtrip is
     bit-exact and routing off the store matches routing off a
-    recomputation."""
+    recomputation.
+
+    ``corpus90`` trains on the CORPUS ONLY (the 90% split): the append
+    path assigns new vectors to these FROZEN centroids, exactly how a
+    production IVF index absorbs a day batch (retraining the codebook
+    would re-shuffle every inverted list)."""
     import os
 
     from confluent_kafka_streams_examples_spark.artifacts import materialized
 
     def build() -> DataFrame:
-        return _ivf_codebook(load_table(spark, "embeddings", sf_dir))
+        return _ivf_codebook(_ivf_training_set(spark, sf_dir, corpus90))
 
     return materialized(
         spark,
         os.path.join(sf_dir, "embeddings.parquet"),
-        "ivf_codebook|6dp",
+        _ivf_tag("codebook", corpus90),
         build,
     )
 
 
-def _ivf_index_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _ivf_index_table(
+    spark: SparkSession, sf_dir: str, corpus90: bool = False
+) -> DataFrame:
     """Materialized IVF inverted lists: (vec_id, v, nrm) partitioned by
     list_id — built once per embeddings version from the stored
     codebook, so probes at any later time touch nprobe directories of
     a STABLE index, exactly a vector DB's layout.  Assignment is the
     6-dp-rounded argmin, reproducible across engines and build
-    times."""
+    times.  ``corpus90`` indexes the corpus split under its own
+    codebook — the once-per-corpus cost the append path exists to
+    avoid paying daily (scripts/ivf_append_probe.py times the two
+    phases separately)."""
     import os
 
     from confluent_kafka_streams_examples_spark.artifacts import materialized
 
     def build() -> DataFrame:
-        emb = load_table(spark, "embeddings", sf_dir)
-        base = _norm_bucket_base(emb)
-        dist = _ivf_dist(base, _ivf_codebook_table(spark, sf_dir))
-        assign = (
-            dist.groupBy("vec_id")
-            .agg(F.min(F.struct("d2", "label")).alias("m"))
-            .select("vec_id", F.col("m.label").alias("label"))
-        )
-        return (
-            assign.join(base.select("vec_id", "v", "nrm"), "vec_id")
-            .withColumnRenamed("label", "list_id")
+        base = similarity.vector_base(_ivf_training_set(spark, sf_dir, corpus90))
+        return similarity.ivf_assign(
+            base, _ivf_codebook_table(spark, sf_dir, corpus90)
         )
 
     return materialized(
         spark,
         os.path.join(sf_dir, "embeddings.parquet"),
-        "ivf_index|6dp",
+        _ivf_tag("index", corpus90),
         build,
         partition_by="list_id",
+    )
+
+
+def _ivf_probe(
+    spark: SparkSession, sf_dir: str, lists: DataFrame, cent: DataFrame
+) -> DataFrame:
+    """The collect-free IVF probe: the router picks each query's
+    NPROBE nearest lists of the (label, cv) codebook ``cent`` and the
+    query is scored against the vectors those lists hold in ``lists``
+    (a list_id-partitioned index).  The routing rows reach the index
+    as a broadcast equi-join on the partition column, so dynamic
+    partition pruning reads only the probed list directories."""
+    base = similarity.vector_base(load_table(spark, "embeddings", sf_dir))
+    probe = similarity.ivf_route(similarity.ivf_distances(base, cent))
+    q = similarity.query_vectors(base)
+    return similarity.cosine_topk_per_query(
+        lists.join(F.broadcast(probe), "list_id").join(F.broadcast(q), "query_id")
     )
 
 
@@ -850,22 +796,17 @@ def similarity_ivf_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruned path is the scale variant, not a different answer.
     Reference analog: reading a materialized state store instead of
     recomputing the stream (ProcessorApiExample.scala:74-78)."""
-    emb = load_table(spark, "embeddings", sf_dir)
-    qbase = _norm_bucket_base(emb).filter(F.col("vec_id") < 5)
-    # router distances: Q query vectors x k stored centroids (the full
-    # corpus-side assignment lives in the materialized index)
-    dist = _ivf_dist(qbase, _ivf_codebook_table(spark, sf_dir))
-
-    # router: nprobe=2 nearest lists per query vector (Q x 2 scalars).
+    base = similarity.vector_base(load_table(spark, "embeddings", sf_dir))
+    # router over the stored codebook: Q query vectors x k centroids
+    # (the full corpus-side assignment lives in the materialized index).
     # Bounded driver collect: on a dense-id corpus the query set is ids
-    # 0..4, so more than 2 x 5 rows means negative ids joined it
-    n_route = 2 * 5
-    wq = Window.partitionBy("query_id").orderBy("d2", "label")
+    # 0..N_QUERIES-1, so more than NPROBE x N_QUERIES rows means
+    # negative ids joined it
+    n_route = similarity.NPROBE * similarity.N_QUERIES
     probe_rows = (
-        dist.select(F.col("vec_id").alias("query_id"), "label", "d2")
-        .withColumn("crn", F.row_number().over(wq))
-        .filter(F.col("crn") <= 2)
-        .select("query_id", "label")
+        similarity.ivf_route(
+            similarity.ivf_distances(base, _ivf_codebook_table(spark, sf_dir))
+        )
         .limit(n_route + 1)
         .collect()
     )
@@ -874,31 +815,17 @@ def similarity_ivf_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"similarity_ivf_pruned: router returned more than {n_route} "
             "rows; the query set vec_id < 5 needs non-negative dense ids"
         )
-    probed_lists = sorted({r["label"] for r in probe_rows})
+    probed_lists = sorted({r["list_id"] for r in probe_rows})
     probe = spark.createDataFrame(
-        [(r["query_id"], r["label"]) for r in probe_rows],
+        [(r["query_id"], r["list_id"]) for r in probe_rows],
         "query_id bigint, list_id int",
     )
-    q = qbase.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
+    q = similarity.query_vectors(base)
     idx = _ivf_index_table(spark, sf_dir).filter(
         F.col("list_id").isin(probed_lists)
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-    return (
-        idx.join(F.broadcast(probe), "list_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .join(F.broadcast(q), "query_id")
-        .withColumn(
-            "cos_sim",
-            F.round(_dot(F.col("v"), F.col("qv")) / (F.col("nrm") * F.col("qnrm")), 6),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "vec_id", "cos_sim")
+    return similarity.cosine_topk_per_query(
+        idx.join(F.broadcast(probe), "list_id").join(F.broadcast(q), "query_id")
     )
 
 
@@ -920,36 +847,11 @@ def similarity_ivf_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
     probed list directories.  Reference analog: reading a materialized
     state store instead of recomputing the stream
     (ProcessorApiExample.scala:74-78)."""
-    emb = load_table(spark, "embeddings", sf_dir)
-    qbase = _norm_bucket_base(emb).filter(F.col("vec_id") < 5)
-    dist = _ivf_dist(qbase, _ivf_codebook_table(spark, sf_dir))
-
-    # router: nprobe=2 nearest lists per query vector — kept distributed
-    wq = Window.partitionBy("query_id").orderBy("d2", "label")
-    probe = (
-        dist.select(F.col("vec_id").alias("query_id"), "label", "d2")
-        .withColumn("crn", F.row_number().over(wq))
-        .filter(F.col("crn") <= 2)
-        .select("query_id", F.col("label").alias("list_id"))
-    )
-    q = qbase.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
-    idx = _ivf_index_table(spark, sf_dir)
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-    return (
-        idx.join(F.broadcast(probe), "list_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .join(F.broadcast(q), "query_id")
-        .withColumn(
-            "cos_sim",
-            F.round(_dot(F.col("v"), F.col("qv")) / (F.col("nrm") * F.col("qnrm")), 6),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "vec_id", "cos_sim")
+    return _ivf_probe(
+        spark,
+        sf_dir,
+        _ivf_index_table(spark, sf_dir),
+        _ivf_codebook_table(spark, sf_dir),
     )
 
 
@@ -959,76 +861,13 @@ def similarity_ivf_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rebuild, and a drift statistic must gate when rebuild is due.
 # =====================================================================
 
-#: deterministic day-batch split (the sketch_hll_incremental pattern):
-#: vec_id % 10 == 0 is "today's append", the rest is the trained corpus
-_IVF_NEW_PRED = "vec_id % 10 = 0"
-
-
-def _ivf_codebook_corpus_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Codebook trained on the CORPUS ONLY (the 90% split) — the
-    append path assigns new vectors to these FROZEN centroids, exactly
-    how a production IVF index absorbs a day batch (retraining the
-    codebook would re-shuffle every inverted list)."""
-    import os
-
-    from confluent_kafka_streams_examples_spark.artifacts import materialized
-
-    def build() -> DataFrame:
-        emb = load_table(spark, "embeddings", sf_dir).filter(
-            F.expr(f"NOT ({_IVF_NEW_PRED})")
-        )
-        return _ivf_codebook(emb)
-
-    return materialized(
-        spark,
-        os.path.join(sf_dir, "embeddings.parquet"),
-        "ivf_codebook|6dp|corpus90",
-        build,
+def _ivf_day_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, v, nrm, list_id): today's append filed under the
+    FROZEN corpus codebook — what the day batch adds to each list."""
+    emb = load_table(spark, "embeddings", sf_dir).filter(F.expr(_IVF_NEW_PRED))
+    return similarity.ivf_assign(
+        similarity.vector_base(emb), _ivf_codebook_table(spark, sf_dir, corpus90=True)
     )
-
-
-def _ivf_assign(base: DataFrame, cent: DataFrame) -> DataFrame:
-    """(vec_id, v, nrm, list_id): nearest-centroid assignment of
-    ``base`` against a frozen codebook — shared by the initial index
-    build and the day-batch append."""
-    dist = _ivf_dist(base, cent)
-    assign = (
-        dist.groupBy("vec_id")
-        .agg(F.min(F.struct("d2", "label")).alias("m"))
-        .select("vec_id", F.col("m.label").alias("label"))
-    )
-    return (
-        assign.join(base.select("vec_id", "v", "nrm"), "vec_id")
-        .withColumnRenamed("label", "list_id")
-    )
-
-
-def _ivf_index_base_table(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the CORPUS index (frozen-codebook assignment of the
-    90% split, partitioned by list_id) and return its artifact path —
-    the once-per-corpus cost the append path exists to avoid paying
-    daily.  Split out from the append so the two phases are separately
-    timeable (scripts/ivf_append_probe.py measures append vs rebuild)."""
-    import os
-
-    from confluent_kafka_streams_examples_spark.artifacts import (
-        artifact_path,
-        materialized,
-    )
-
-    src_file = os.path.join(sf_dir, "embeddings.parquet")
-    tag = "ivf_index|6dp|corpus90"
-
-    def build() -> DataFrame:
-        emb = load_table(spark, "embeddings", sf_dir).filter(
-            F.expr(f"NOT ({_IVF_NEW_PRED})")
-        )
-        return _ivf_assign(
-            _norm_bucket_base(emb), _ivf_codebook_corpus_table(spark, sf_dir)
-        )
-
-    materialized(spark, src_file, tag, build, partition_by="list_id")
-    return artifact_path(src_file, tag)
 
 
 def _ivf_index_appended_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1046,16 +885,17 @@ def _ivf_index_appended_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     rename, which parquet append does per-file anyway."""
     import os
 
-    path = _ivf_index_base_table(spark, sf_dir)
+    from confluent_kafka_streams_examples_spark.artifacts import artifact_path
+
+    _ivf_index_table(spark, sf_dir, corpus90=True)  # built on a miss
+    path = artifact_path(
+        os.path.join(sf_dir, "embeddings.parquet"), _ivf_tag("index", True)
+    )
     marker = os.path.join(path, "_CKSE_APPENDED_batch1")
     if not os.path.exists(marker):
-        emb = load_table(spark, "embeddings", sf_dir).filter(
-            F.expr(_IVF_NEW_PRED)
-        )
-        day = _ivf_assign(
-            _norm_bucket_base(emb), _ivf_codebook_corpus_table(spark, sf_dir)
-        )
-        day.write.mode("append").partitionBy("list_id").parquet(path)
+        _ivf_day_batch(spark, sf_dir).write.mode("append").partitionBy(
+            "list_id"
+        ).parquet(path)
         with open(marker, "w", encoding="utf-8"):
             pass
     return spark.read.parquet(path)
@@ -1121,34 +961,11 @@ def similarity_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same invariant sketch_hll_incremental pins for register
     max-merge.  Reference analog: a compacted changelog absorbing new
     records into a restored state store (KTableExample.scala:52-56)."""
-    emb = load_table(spark, "embeddings", sf_dir)
-    qbase = _norm_bucket_base(emb).filter(F.col("vec_id") < 5)
-    dist = _ivf_dist(qbase, _ivf_codebook_corpus_table(spark, sf_dir))
-    wq = Window.partitionBy("query_id").orderBy("d2", "label")
-    probe = (
-        dist.select(F.col("vec_id").alias("query_id"), "label", "d2")
-        .withColumn("crn", F.row_number().over(wq))
-        .filter(F.col("crn") <= 2)
-        .select("query_id", F.col("label").alias("list_id"))
-    )
-    q = qbase.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
-    idx = _ivf_index_appended_table(spark, sf_dir)
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-    return (
-        idx.join(F.broadcast(probe), "list_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .join(F.broadcast(q), "query_id")
-        .withColumn(
-            "cos_sim",
-            F.round(_dot(F.col("v"), F.col("qv")) / (F.col("nrm") * F.col("qnrm")), 6),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "vec_id", "cos_sim")
+    return _ivf_probe(
+        spark,
+        sf_dir,
+        _ivf_index_appended_table(spark, sf_dir),
+        _ivf_codebook_table(spark, sf_dir, corpus90=True),
     )
 
 
@@ -1206,9 +1023,10 @@ def ivf_drift_stat(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines hash-match on the ratio, not approximately.  Scale: one
     corpus scan, k-row broadcast, and a two-cell aggregate — the
     statistic is free next to the assignment it audits."""
-    emb = load_table(spark, "embeddings", sf_dir)
-    base = _norm_bucket_base(emb)
-    dist = _ivf_dist(base, _ivf_codebook_corpus_table(spark, sf_dir))
+    base = similarity.vector_base(load_table(spark, "embeddings", sf_dir))
+    dist = similarity.ivf_distances(
+        base, _ivf_codebook_table(spark, sf_dir, corpus90=True)
+    )
     mind = dist.groupBy("vec_id").agg(
         F.expr("CAST(floor(min(d2) * 1e6 + 0.5) AS BIGINT)").alias("d2_e6")
     )
@@ -1323,45 +1141,14 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-break (rounded cosine DESC, vec_id), so recall is
     engine-reproducible; at 100 TB the eval runs on a sampled query set
     while the index itself never materializes all-pairs."""
-    from confluent_kafka_streams_examples_spark.functions.scalar import round_det
-
-    emb = load_table(spark, "embeddings", sf_dir)
-    base = _norm_bucket_base(emb)
-    q = base.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-        F.col("bucket").alias("qbucket"),
+    base = _norm_bucket_base(load_table(spark, "embeddings", sf_dir))
+    q = similarity.query_vectors(base, F.col("bucket").alias("qbucket"))
+    # 5-row broadcast: batch ground truth
+    exact3 = similarity.cosine_topk_per_query(base.crossJoin(F.broadcast(q)))
+    ann3 = similarity.cosine_topk_per_query(
+        base.join(F.broadcast(q), base["bucket"] == q["qbucket"])
     )
-    cand = base.select("vec_id", "v", "nrm", "bucket")
-    cos = F.round(_dot(F.col("v"), F.col("qv")) / (F.col("nrm") * F.col("qnrm")), 6)
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-
-    exact3 = (
-        cand.crossJoin(F.broadcast(q))  # 5-row broadcast: batch ground truth
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("cos_sim", cos)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "vec_id")
-    )
-    ann3 = (
-        cand.join(F.broadcast(q), cand["bucket"] == q["qbucket"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("cos_sim", cos)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "vec_id")
-        .withColumn("_hit", F.lit(1))
-    )
-    return (
-        exact3.join(ann3, ["query_id", "vec_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count("_hit").cast("bigint").alias("hits"),
-            round_det(F.count("_hit") / F.lit(3.0), 4).alias("recall_at_3"),
-        )
-    )
+    return similarity.recall_at_k(exact3, ann3)
 
 
 def _km_assign_sql(vrel: str, crel: str, out: str) -> str:
@@ -1426,8 +1213,6 @@ def embedding_kmeans_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     connected_components); at 3 iterations the single lazy plan is
     fine and lets Catalyst pipeline the final assignment with the last
     recompute."""
-    from confluent_kafka_streams_examples_spark.functions.scalar import round_det
-
     emb = load_table(spark, "embeddings", sf_dir)
     vecs = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
     cents = emb.filter(F.col("vec_id") < 8).select(
@@ -1466,18 +1251,9 @@ def embedding_kmeans_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("vec_id", "b.v", "b.cid", "b.dist")
         )
 
-    def recompute(assigned: DataFrame) -> DataFrame:
-        pos = assigned.select("cid", F.posexplode("v").alias("d", "val"))
-        per_dim = pos.groupBy("cid", "d").agg(round_det(F.avg("val"), 6).alias("cv"))
-        return (
-            per_dim.groupBy("cid")
-            .agg(F.array_sort(F.collect_list(F.struct("d", "cv"))).alias("pairs"))
-            .select("cid", F.transform("pairs", lambda p: p["cv"]).alias("c"))
-        )
-
     a = assign(cents)
     for _ in range(2):
-        a = assign(recompute(a))
+        a = assign(similarity.centroid_means(a, "cid", "v", "c"))
     return a.groupBy("cid").agg(
         F.count(F.lit(1)).alias("n_members"),
         F.sum(F.floor(F.col("dist") * 1e6 + F.lit(0.5)).cast("long"))
@@ -1529,8 +1305,6 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     The k=8 pin here exists FOR THE ORACLE (identical init on both
     engines at every sf); the production-shape knob is exercised by
     ``semdedup_prune_scaled``, which sizes k with the corpus."""
-    from confluent_kafka_streams_examples_spark.operators import similarity
-
     emb = load_table(spark, "embeddings", sf_dir)
     vecs = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
@@ -1575,8 +1349,6 @@ def semdedup_prune_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle computes the SAME k from the same count, so both engines
     pick identical init centroids at every sf and every probe
     replication."""
-    from confluent_kafka_streams_examples_spark.operators import similarity
-
     emb = load_table(spark, "embeddings", sf_dir)
     vecs = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
@@ -1645,10 +1417,10 @@ def similarity_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning here (similarity_ivf_pruned) unchanged.  All distances are
     integer micros BEFORE any summation: bitwise-identical across
     engines and shuffle orders."""
-    return _pq_adc_topk(spark, sf_dir, k=3)
+    return _pq_adc_topk(spark, sf_dir)
 
 
-def _pq_adc_topk(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
+def _pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PQ/ADC pipeline shared by similarity_pq_adc and its recall
     eval: (query_id, vec_id, adc_micro) top-k rows per query."""
     emb = load_table(spark, "embeddings", sf_dir)
@@ -1750,7 +1522,7 @@ def _pq_adc_topk(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
     w = Window.partitionBy("query_id").orderBy("adc_micro", "vec_id")
     return (
         adc.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
+        .filter(F.col("rn") <= similarity.TOP_K)
         .select("query_id", "vec_id", "adc_micro")
     )
 
@@ -1792,15 +1564,8 @@ def pq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact pass runs over a corpus sample and the recall estimate
     stays unbiased while the PQ side scans codes, exactly like
     production recall monitoring."""
-    from confluent_kafka_streams_examples_spark.functions.scalar import round_det
-
-    emb = load_table(spark, "embeddings", sf_dir)
-    vecs = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    q = vecs.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
+    base = similarity.vector_base(load_table(spark, "embeddings", sf_dir))
+    q = similarity.query_vectors(base)
     dmicro = F.floor(
         F.aggregate(
             F.zip_with(F.col("v"), F.col("qv"), lambda x, y: (x - y) * (x - y)),
@@ -1812,24 +1577,14 @@ def pq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast("long")
     w = Window.partitionBy("query_id").orderBy("dmicro", "vec_id")
     truth3 = (
-        vecs.crossJoin(F.broadcast(q))  # 5-row broadcast: batch ground truth
+        base.crossJoin(F.broadcast(q))  # 5-row broadcast: batch ground truth
         .filter(F.col("vec_id") != F.col("query_id"))
         .withColumn("dmicro", dmicro)
         .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
+        .filter(F.col("rn") <= similarity.TOP_K)
         .select("query_id", "vec_id")
     )
-    pq3 = _pq_adc_topk(spark, sf_dir, k=3).select(
-        "query_id", "vec_id", F.lit(1).alias("_hit")
-    )
-    return (
-        truth3.join(pq3, ["query_id", "vec_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count("_hit").cast("bigint").alias("hits"),
-            round_det(F.count("_hit") / F.lit(3.0), 4).alias("recall_at_3"),
-        )
-    )
+    return similarity.recall_at_k(truth3, _pq_adc_topk(spark, sf_dir))
 
 
 @query(

@@ -33,15 +33,38 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql import DataFrame, SparkSession  # noqa: E402
+
+import confluent_kafka_streams_examples_spark.queries_extra as qx  # noqa: E402
+from confluent_kafka_streams_examples_spark import artifacts  # noqa: E402
+from confluent_kafka_streams_examples_spark.plans.describe import explain_str  # noqa: E402
 from confluent_kafka_streams_examples_spark.session import get_spark  # noqa: E402
+
+
+def probe_over(spark: SparkSession, sf_dir: str, idx_path: str) -> DataFrame:
+    """similarity_ivf_append's probe over the index stored at
+    ``idx_path`` (routed by the same frozen corpus codebook)."""
+    return qx._ivf_probe(
+        spark,
+        sf_dir,
+        spark.read.parquet(idx_path),
+        qx._ivf_codebook_table(spark, sf_dir, corpus90=True),
+    )
+
+
+def dpp_pruned(df: DataFrame) -> bool:
+    """True when the index scan carries a dynamic partition filter on
+    list_id, i.e. the probe reads only the probed list directories."""
+    return any(
+        "list_id" in ln and "dynamicpruning" in ln
+        for ln in explain_str(df, "formatted").splitlines()
+        if "PartitionFilters" in ln
+    )
 
 
 def main() -> None:
     replicas = [int(a) for a in sys.argv[1:]] or [1, 100]
     from scripts.scale_probe import build_corpus
-
-    import confluent_kafka_streams_examples_spark.queries_extra as qx
-    from confluent_kafka_streams_examples_spark import artifacts
 
     results = []
     for r in replicas:
@@ -56,12 +79,15 @@ def main() -> None:
         shutil.rmtree(artifacts.artifact_root(), ignore_errors=True)
 
         t0 = time.perf_counter()
-        qx._ivf_codebook_corpus_table(spark, sf_dir).count()
+        qx._ivf_codebook_table(spark, sf_dir, corpus90=True).count()
         t_codebook = time.perf_counter() - t0
 
         t0 = time.perf_counter()
-        path = qx._ivf_index_base_table(spark, sf_dir)
+        qx._ivf_index_table(spark, sf_dir, corpus90=True)
         t_build = time.perf_counter() - t0
+        path = artifacts.artifact_path(
+            os.path.join(sf_dir, "embeddings.parquet"), qx._ivf_tag("index", True)
+        )
 
         t0 = time.perf_counter()
         idx = qx._ivf_index_appended_table(spark, sf_dir)
@@ -70,19 +96,10 @@ def main() -> None:
         n_new = idx.filter("vec_id % 10 = 0").count()
 
         t0 = time.perf_counter()
-        from confluent_kafka_streams_examples_spark.plans.describe import (
-            explain_str,
-        )
-
         out = qx.similarity_ivf_append(spark, sf_dir)
-        plan = explain_str(out, "formatted")
+        pruned = dpp_pruned(out)
         rows = out.count()
         t_probe = time.perf_counter() - t0
-        pruned = any(
-            "list_id" in ln and "dynamicpruning" in ln
-            for ln in plan.splitlines()
-            if "PartitionFilters" in ln
-        )
         n_lists = len(glob.glob(os.path.join(path, "list_id=*")))
 
         # --- compaction phase (VERDICT r10 #5): small-files decay ---
@@ -93,22 +110,11 @@ def main() -> None:
         # offending partitions, re-measure.
         from pyspark.sql import functions as F
 
-        from confluent_kafka_streams_examples_spark.artifacts import (
-            compact_partitions,
-        )
-        from confluent_kafka_streams_examples_spark.session import load_table
-
         N_DAYS = int(os.environ.get("CKSE_IVF_FRAG_DAYS", "20"))
         frag = os.path.join(os.path.dirname(path), "frag_probe_idx")
         shutil.rmtree(frag, ignore_errors=True)
         shutil.copytree(path, frag)
-        emb_new = load_table(spark, "embeddings", sf_dir).filter(
-            F.expr(qx._IVF_NEW_PRED)
-        )
-        day = qx._ivf_assign(
-            qx._norm_bucket_base(emb_new),
-            qx._ivf_codebook_corpus_table(spark, sf_dir),
-        ).persist()
+        day = qx._ivf_day_batch(spark, sf_dir).persist()
         day.count()
         for s in range(N_DAYS):
             day.filter(
@@ -122,66 +128,19 @@ def main() -> None:
             for d in glob.glob(os.path.join(frag, "list_id=*"))
         ]
 
-        def probe_over(idx_path: str) -> tuple[float, int, bool]:
-            idx2 = spark.read.parquet(idx_path)
-            qbase = qx._norm_bucket_base(
-                load_table(spark, "embeddings", sf_dir)
-            ).filter(F.col("vec_id") < 5)
-            from pyspark.sql import Window
-
-            dist = qx._ivf_dist(
-                qbase, qx._ivf_codebook_corpus_table(spark, sf_dir)
-            )
-            wq = Window.partitionBy("query_id").orderBy("d2", "label")
-            pr = (
-                dist.select(
-                    F.col("vec_id").alias("query_id"), "label", "d2"
-                )
-                .withColumn("crn", F.row_number().over(wq))
-                .filter(F.col("crn") <= 2)
-                .select("query_id", F.col("label").alias("list_id"))
-            )
-            qf = qbase.select(
-                F.col("vec_id").alias("query_id"),
-                F.col("v").alias("qv"),
-                F.col("nrm").alias("qnrm"),
-            )
-            w2 = Window.partitionBy("query_id").orderBy(
-                F.col("cos_sim").desc(), F.col("vec_id")
-            )
-            out2 = (
-                idx2.join(F.broadcast(pr), "list_id")
-                .filter(F.col("vec_id") != F.col("query_id"))
-                .join(F.broadcast(qf), "query_id")
-                .withColumn(
-                    "cos_sim",
-                    F.round(
-                        qx._dot(F.col("v"), F.col("qv"))
-                        / (F.col("nrm") * F.col("qnrm")),
-                        6,
-                    ),
-                )
-                .withColumn("rn", F.row_number().over(w2))
-                .filter(F.col("rn") <= 3)
-                .select("query_id", "vec_id", "cos_sim")
-            )
+        def timed_probe(idx_path: str) -> tuple[float, int, bool]:
+            out2 = probe_over(spark, sf_dir, idx_path)
             best, n2 = None, 0
             for _ in range(3):
                 t1 = time.perf_counter()
                 n2 = out2.count()
                 took = time.perf_counter() - t1
                 best = took if best is None else min(best, took)
-            pl = explain_str(out2, "formatted")
-            pruned2 = any(
-                "list_id" in ln and "dynamicpruning" in ln
-                for ln in pl.splitlines()
-                if "PartitionFilters" in ln
-            )
-            return best, n2, pruned2
+            return best, n2, dpp_pruned(out2)
 
-        t_frag, rows_frag, pruned_frag = probe_over(frag)
+        t_frag, rows_frag, pruned_frag = timed_probe(frag)
         t1 = time.perf_counter()
-        compacted = compact_partitions(
+        compacted = artifacts.compact_partitions(
             spark, frag, "list_id", max_files=4
         )
         t_compact = time.perf_counter() - t1
@@ -189,7 +148,7 @@ def main() -> None:
             sum(1 for f in os.listdir(d) if f.endswith(".parquet"))
             for d in glob.glob(os.path.join(frag, "list_id=*"))
         ]
-        t_comp, rows_comp, pruned_comp = probe_over(frag)
+        t_comp, rows_comp, pruned_comp = timed_probe(frag)
         assert rows_comp == rows_frag, (rows_comp, rows_frag)
         assert pruned_comp, "compaction must not break partition pruning"
         shutil.rmtree(frag, ignore_errors=True)

@@ -423,8 +423,7 @@ def test_containment_is_a_projection_union_over_the_pair_table(spark):
     [
         # the corpus is read and tokenized once
         ("lm_unigram_score", "FileScan parquet"),
-        # the Python centroid assignment runs once (the embeddings scan
-        # under the pair-side join is column-pruned per consumer)
+        # the Python centroid assignment runs once
         ("semdedup_prune", "MapInPandas"),
     ],
 )
@@ -432,7 +431,12 @@ def test_shared_subtree_reads_one_exchange(spark, name, node):
     """lm_unigram_score's token counts and semdedup_prune's cluster
     assignment each feed more than one consumer without a cache: the
     executed plan reads the shared subtree again through a
-    ReusedExchange, so its expensive node runs once."""
+    ReusedExchange, so its expensive node runs once.  The source is
+    scanned only where a consumer needs columns the shared subtree
+    drops: semdedup_prune reads embeddings for the assignment and for
+    the vectors its pair search rejoins, and its per-cluster summary
+    reads the assignment alone."""
+    max_scans = {"lm_unigram_score": 1, "semdedup_prune": 2}[name]
     df = QUERIES[name](spark, SF_SMOKE)
     df.collect()
     final = explain_str(df, "simple").split("== Initial Plan ==")[0]
@@ -440,6 +444,8 @@ def test_shared_subtree_reads_one_exchange(spark, name, node):
     assert "ReusedExchange" in final, final
     assert "InMemoryTableScan" not in final, final
     assert sum(node in ln for ln in final.splitlines()) == 1, final
+    scans = [ln for ln in final.splitlines() if "FileScan parquet" in ln]
+    assert len(scans) <= max_scans, final
 
 
 def test_concurrent_degree_is_single_equi_join(spark):
@@ -700,6 +706,10 @@ def test_no_unbounded_bigint_multiply_over_corpus_aggregates(spark):
         # Carter-Wegman h1 + j*h2: h2 < 2^48 (12 hex chars), j <= 15,
         # so |j*h2| < 2^52 and the sum < 2^53 — dedup.py hash_pair
         "dedup_incremental": "minhash permutation: 48-bit half x j<=15",
+        # the same hash_pair permutations, computed under a persisted
+        # signature table (the walk below descends into cached plans)
+        "dedup_incremental_persisted": "minhash permutation: 48-bit half x j<=15",
+        "neardup_verify_levenshtein": "minhash permutation: 48-bit half x j<=15",
         # c is a per-(doc, token) count bounded by DOCUMENT length;
         # |lp_micro| = |ln p|*1e6 <= ~75e6 even at p = 1e-33, so the
         # product stays < 1e17 for documents up to 1e9 tokens
@@ -718,6 +728,10 @@ def test_no_unbounded_bigint_multiply_over_corpus_aggregates(spark):
         # component, summed over 16/64 components — bounded by the
         # signature width, independent of corpus size
         "dedup_simhash": "bit x 2^i folds, signature-width bounded",
+        # simhash64's per-shingle vote 2 * bit - 1 (under its persisted
+        # fingerprint table): the product is at most 2, and the votes
+        # are summed, never multiplied
+        "dedup_simhash64": "2 x one bit per shingle vote",
         # quantile histogram (profile.py kind=-2): sign(+-1) x bucket
         # where bucket <= 64*16+15 = 1039 by construction; and the
         # quantile targets n_num * {50,95,99} — n_num is a row count,
@@ -740,6 +754,14 @@ def test_no_unbounded_bigint_multiply_over_corpus_aggregates(spark):
 
     def walk_plan(p):
         yield p
+        # a persisted subtree is a leaf of the logical plan: its
+        # multiplies live in the cached physical plan, which adaptive
+        # execution wraps around the plan it starts from
+        kind = p.getClass().getSimpleName()
+        if kind == "InMemoryRelation":
+            yield from walk_plan(p.cachedPlan())
+        elif kind == "AdaptiveSparkPlanExec":
+            yield from walk_plan(p.inputPlan())
         for c in jseq(p.children()):
             yield from walk_plan(c)
 
@@ -806,3 +828,28 @@ def test_ivf_append_scan_prunes_and_serves_new_vectors(spark):
     # (deterministic data, checked to hold at sf0.001 and sf0.01)
     rows = QUERIES["similarity_ivf_append"](spark, SF_SMOKE).collect()
     assert any(r["vec_id"] % 10 == 0 for r in rows), rows
+
+
+def test_ivf_append_probe_plans_construct(spark):
+    """Bitrot guard for scripts/ivf_append_probe.py, which no other
+    test runs: load the script and build the plans it times — the
+    similarity_ivf_append probe, its day batch and ``probe_over`` on
+    the stored corpus index — without running the timing loop.  Both
+    probes must still prune the index scan to the probed lists."""
+    import importlib.util
+    import os
+
+    from confluent_kafka_streams_examples_spark.artifacts import artifact_path
+
+    spec = importlib.util.spec_from_file_location(
+        "ivf_append_probe",
+        os.path.join(os.path.dirname(__file__), "..", "scripts", "ivf_append_probe.py"),
+    )
+    ap = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(ap)
+    assert ap.dpp_pruned(ap.qx.similarity_ivf_append(spark, SF_SMOKE))
+    explain_str(ap.qx._ivf_day_batch(spark, SF_SMOKE), "formatted")
+    index_dir = artifact_path(
+        os.path.join(SF_SMOKE, "embeddings.parquet"), ap.qx._ivf_tag("index", True)
+    )
+    assert ap.dpp_pruned(ap.probe_over(spark, SF_SMOKE, index_dir))
