@@ -21,12 +21,9 @@ from pyspark.sql import functions as F
 from confluent_kafka_streams_examples_spark.session import fan_out_small_scan
 from confluent_kafka_streams_examples_spark.operators.sketches import (
     CMS_ROWS,
-    HLL_DEN,
-    HLL_M,
-    HLL_NUM,
-    HLL_RHO_FROM_T_SQL,
-    HLL_TAIL_TRIM_EXPR,
-    hll_est_sql,
+    hll_estimate_from_sums,
+    hll_index_rho,
+    hll_term,
 )
 
 
@@ -52,20 +49,6 @@ def _stacked(df: DataFrame, cols: dict[str, Column]) -> DataFrame:
     )
 
 
-def _hashed_parts(df: DataFrame, cols: dict[str, Column]) -> DataFrame:
-    """(col_name, j, tail): the stacked + md5-split register rows both
-    the batch profiler and its streaming twin aggregate.  Nulls park
-    in register -1 with a NULL tail (they carry the null count)."""
-    h = _stacked(df, cols).select("col_name", F.md5("val").alias("h"))
-    return h.select(
-        "col_name",
-        F.when(F.col("h").isNull(), F.lit(-1))
-        .otherwise(F.conv(F.substring("h", 1, 2), 16, 10).cast("int"))
-        .alias("j"),
-        F.substring("h", 3, 15).alias("tail"),
-    ).withColumn("t", F.expr(HLL_TAIL_TRIM_EXPR))
-
-
 def profile_registers(df: DataFrame, cols: dict[str, Column]) -> DataFrame:
     """Level-1 profiler state: (col_name, j, cnt, R) — per-register
     row count and rho maximum.  ONE built-in aggregation, so it runs
@@ -74,13 +57,12 @@ def profile_registers(df: DataFrame, cols: dict[str, Column]) -> DataFrame:
     n_cols x 257 rows regardless of stream length): this is the
     profiler's streaming twin (VERDICT r10 #7), same pattern as
     `hll_portable_registers`.  Feed the (latest) register rows to
-    :func:`profile_from_registers` for the finished profile."""
-    # rho over the pre-trimmed tail (one ltrim vs three regexp_extract
-    # per value; register-identical — see sketches.HLL_RHO_FROM_T_SQL)
-    rho = F.expr(HLL_RHO_FROM_T_SQL)
+    :func:`profile_from_registers` for the finished profile.  Nulls
+    park in register -1 (`hll_index_rho`), which carries the null
+    count."""
+    h = _stacked(df, cols).select("col_name", F.md5("val").alias("h"))
     return (
-        _hashed_parts(df, cols)
-        .select("col_name", "j", rho.alias("rho"))
+        hll_index_rho(h, "col_name")
         .groupBy("col_name", "j")
         .agg(F.count(F.lit(1)).alias("cnt"), F.max("rho").alias("R"))
     )
@@ -100,29 +82,6 @@ def profile_table(df: DataFrame, cols: dict[str, Column]) -> DataFrame:
     return profile_from_registers(profile_registers(df, cols))
 
 
-def _hll_raw_est() -> list[Column]:
-    """(raw_est, zero_registers): the integer-exact raw HLL estimate and
-    empty-register count from a profile row's (S_present, n_present)."""
-    return [
-        F.expr(
-            f"CAST(CAST('{HLL_NUM}' AS DECIMAL(38,0))"
-            f" div (CAST({HLL_DEN} AS DECIMAL(38,0))"
-            f" * (coalesce(S_present, CAST(0 AS DECIMAL(38,0)))"
-            f" + CAST(({HLL_M} - n_present) AS DECIMAL(38,0))"
-            f" * CAST(shiftleft(CAST(1 AS BIGINT), 62) AS DECIMAL(38,0))))"
-            f" AS BIGINT)"
-        ).alias("raw_est"),
-        F.expr(f"CAST({HLL_M} - n_present AS BIGINT)").alias("zero_registers"),
-    ]
-
-
-def _hll_distinct_est() -> Column:
-    """The corrected distinct estimate over (raw_est, zero_registers)."""
-    return F.expr(hll_est_sql("raw_est", "zero_registers", "div")).alias(
-        "distinct_est"
-    )
-
-
 def profile_from_registers(lvl1: DataFrame) -> DataFrame:
     """Fold a (col_name, j, cnt, R) register table — the batch lvl1 or
     a streaming twin's final state — into the profile rows
@@ -134,28 +93,11 @@ def profile_from_registers(lvl1: DataFrame) -> DataFrame:
         F.sum(F.when(F.col("j") == -1, F.col("cnt")).otherwise(F.lit(0)))
         .cast("bigint")
         .alias("n_null"),
-        F.sum(
-            F.when(
-                F.col("j") >= 0,
-                F.expr(
-                    "CAST(shiftleft(CAST(1 AS BIGINT), 62 - R) AS DECIMAL(38,0))"
-                ),
-            )
-        ).alias("S_present"),
+        F.sum(F.when(F.col("j") >= 0, hll_term())).alias("S_present"),
         F.sum((F.col("j") >= 0).cast("long")).alias("n_present"),
     )
-    raw = prof.select(
-        "col_name",
-        "n_rows",
-        "n_null",
-        *_hll_raw_est(),
-    )
-    return raw.select(
-        "col_name",
-        "n_rows",
-        "n_null",
-        _hll_distinct_est(),
-        "zero_registers",
+    return hll_estimate_from_sums(
+        prof, "distinct_est", "col_name", "n_rows", "n_null"
     )
 
 
@@ -184,7 +126,7 @@ def profile_table_extended(
     numeric columns were misleading anyway).
 
     Shape: every stacked (col_name, val) row explodes into 1 HLL row
-    (kind=-1, register index, rho tail, and the value stats — counted
+    (kind=-1, register index, rho, and the value stats — counted
     ONCE per source row) plus CMS_ROWS CMS rows (kind=r, bucket), and
     a three-level aggregation cascade collapses them: (col, kind, idx)
     -> (col, kind) -> (col).  Only the first aggregation sees data
@@ -246,12 +188,15 @@ def profile_table_extended(
     whose canonical form is not numeric (free text, JSON) report
     NULL, same contract as min_num/max_num.
     """
-    h = _stacked(df, cols).select(
+    stacked = _stacked(df, cols).select(
         "col_name",
         "val",
         F.md5("val").alias("h"),
         F.expr("try_cast(val AS BIGINT)").alias("nval"),
-    ).withColumns(
+    )
+    # the HLL register and rho come once per value, before the explode
+    # below, which then carries only the int rho on the HLL row
+    h = hll_index_rho(stacked, "col_name", "val", "h", "nval").withColumns(
         {
             # quantile-histogram bucket pieces (see docstring): clamp
             # guards the -2^63 negation edge; conv-to-binary LENGTH is
@@ -286,13 +231,7 @@ def profile_table_extended(
         ).otherwise(bucket_expr)
     qbucket = F.when(F.col("nval").isNotNull(), bucket_expr)
     kinds = [
-        F.struct(
-            F.lit(-1).alias("kind"),
-            F.when(F.col("h").isNull(), F.lit(-1))
-            .otherwise(F.conv(F.substring("h", 1, 2), 16, 10).cast("int"))
-            .alias("idx"),
-            F.substring("h", 3, 15).alias("tail"),
-        )
+        F.struct(F.lit(-1).alias("kind"), F.col("j").alias("idx"), "rho")
     ]
     for r in range(CMS_ROWS):
         # fused layout: CMS row r's bucket = hex pair at chars 18+2r of
@@ -303,7 +242,7 @@ def profile_table_extended(
                 F.conv(F.substring("h", 18 + 2 * r, 2), 16, 10)
                 .cast("int")
                 .alias("idx"),
-                F.lit(None).cast("string").alias("tail"),
+                F.lit(None).cast("int").alias("rho"),
             )
         )
     # quantile-histogram rows: one per NUMERIC value, idx = log bucket
@@ -311,26 +250,20 @@ def profile_table_extended(
         F.struct(
             F.lit(-2).alias("kind"),
             qbucket.alias("idx"),
-            F.lit(None).cast("string").alias("tail"),
+            F.lit(None).cast("int").alias("rho"),
         )
     )
     ex = (
         h.select(
             "col_name", "val", "nval", F.explode(F.array(*kinds)).alias("k")
         )
-        .select("col_name", "val", "nval", "k.kind", "k.idx", "k.tail")
+        .select("col_name", "val", "nval", "k.kind", "k.idx", "k.rho")
         # null values carry no CMS rows (frequency of actual values) and
         # non-numeric values no histogram rows; nulls still ride the
         # HLL row at idx=-1 for the null count
         .filter(~((F.col("kind") != -1) & F.col("idx").isNull()))
-        # pre-trim once per exploded row (NULL tail on non-HLL rows is
-        # a no-op) so rho is one ltrim, not three regexp_extract
-        .withColumn("t", F.expr(HLL_TAIL_TRIM_EXPR))
     )
     is_hll = F.col("kind") == -1
-    rho = F.when(
-        is_hll & (F.col("idx") >= 0), F.expr(HLL_RHO_FROM_T_SQL)
-    )
     # numeric-only aggregation buffers (see docstring): try_cast keeps
     # the whole cascade inside HashAggregate / whole-stage codegen
     lvl1 = (
@@ -338,7 +271,7 @@ def profile_table_extended(
             "col_name",
             "kind",
             "idx",
-            rho.alias("rho"),
+            "rho",
             # numeric value feeds min/max on the HLL row AND the
             # per-bucket exact min on the histogram rows
             F.when(is_hll | (F.col("kind") == -2), F.col("nval")).alias(
@@ -360,14 +293,7 @@ def profile_table_extended(
         F.sum(F.when(F.col("idx") == -1, F.col("cnt")).otherwise(F.lit(0))).alias(
             "n_null_k"
         ),
-        F.sum(
-            F.when(
-                F.col("idx") >= 0,
-                F.expr(
-                    "CAST(shiftleft(CAST(1 AS BIGINT), 62 - R) AS DECIMAL(38,0))"
-                ),
-            )
-        ).alias("S_k"),
+        F.sum(F.when(F.col("idx") >= 0, hll_term())).alias("S_k"),
         F.sum((F.col("idx") >= 0).cast("long")).alias("n_present_k"),
         F.min("mn").alias("mn"),
         F.max("mx").alias("mx"),
@@ -415,23 +341,15 @@ def profile_table_extended(
         .cast("bigint")
         .alias("n_num"),
     )
-    raw = prof.select(
+    est = hll_estimate_from_sums(
+        prof,
+        "distinct_est",
         "col_name",
         "n_rows",
         "n_null",
-        *_hll_raw_est(),
         "min_num",
         "max_num",
-        # DECIMAL(38,0) guard: sum_len x 100 as BIGINT would overflow
-        # past ~9.2e16 total chars (~92 PB of one column's text) —
-        # inside the design envelope, so the multiply must be exact
-        # arbitrary-precision (DuckDB's sum() already promotes to
-        # HUGEINT, giving the oracle the same guard for free)
-        F.expr(
-            "CASE WHEN n_rows - n_null > 0 THEN"
-            " CAST((CAST(sum_len AS DECIMAL(38,0)) * 100)"
-            " div (n_rows - n_null) AS BIGINT) END"
-        ).alias("avg_len_e2"),
+        "sum_len",
         "top_freq_est",
         "hist",
         "n_num",
@@ -451,15 +369,24 @@ def profile_table_extended(
             f" acc -> acc.ans) END"
         ).alias(f"p{p}_num")
 
-    return raw.select(
+    return est.select(
         "col_name",
         "n_rows",
         "n_null",
-        _hll_distinct_est(),
+        "distinct_est",
         "zero_registers",
         "min_num",
         "max_num",
-        "avg_len_e2",
+        # DECIMAL(38,0) guard: sum_len x 100 as BIGINT would overflow
+        # past ~9.2e16 total chars (~92 PB of one column's text) —
+        # inside the design envelope, so the multiply must be exact
+        # arbitrary-precision (DuckDB's sum() already promotes to
+        # HUGEINT, giving the oracle the same guard for free)
+        F.expr(
+            "CASE WHEN n_rows - n_null > 0 THEN"
+            " CAST((CAST(sum_len AS DECIMAL(38,0)) * 100)"
+            " div (n_rows - n_null) AS BIGINT) END"
+        ).alias("avg_len_e2"),
         "top_freq_est",
         q(50),
         q(95),

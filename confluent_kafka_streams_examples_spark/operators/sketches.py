@@ -83,8 +83,10 @@ def quantile_estimates(
 # register index = first byte of md5(key), rho = 1 + leading-zero bits
 # of the next 60 — so ANY engine (the DuckDB oracle, a future reader)
 # reproduces the registers exactly, and estimates computed from them in
-# integer arithmetic are hash-comparable.  Used by the
-# `sketch_hll_distinct` oracle query and its streaming twin.
+# integer arithmetic are hash-comparable.  `hll_index_rho`, `hll_term`
+# and `hll_estimate_from_sums` are the one Spark-side spelling of that
+# spec: the HLL queries, their streaming twin and operators/profile.py
+# compose them; only the DuckDB oracle SQL writes it out again.
 # ---------------------------------------------------------------------------
 
 HLL_M = 256  # registers (p=8): std error 1.04/sqrt(256) ~ 6.5%
@@ -144,8 +146,9 @@ HLL_RHO_SQL = """
 # (OPTIMIZATION_r11.md; guide §1.2 step 2: per-task work).  The DuckDB
 # oracles keep the regex form above — the CONTRACT is the register
 # values, which are equal by construction (pinned by the oracle
-# hash-compare on every HLL query).  Callers stage ``t`` with
-# HLL_TAIL_TRIM_EXPR in the projection feeding the aggregate.
+# hash-compare on every HLL query).  Only `hll_index_rho` reads it: it
+# stages ``t`` itself, so callers hand it the md5 column and nothing
+# else.
 HLL_TAIL_TRIM_EXPR = "trim(LEADING '0' FROM tail)"
 HLL_RHO_FROM_T_SQL = """
   CASE WHEN t = '' THEN 61
@@ -155,6 +158,61 @@ HLL_RHO_FROM_T_SQL = """
                WHEN '4' THEN 1 WHEN '5' THEN 1 WHEN '6' THEN 1 WHEN '7' THEN 1
                ELSE 0 END) + 1 END
 """
+
+
+def hll_index_rho(df: DataFrame, *keep: str) -> DataFrame:
+    """(*keep, j, rho) from ``df``'s md5 hex column ``h``: register
+    index j = the first byte, rho from the 60 bits after it.  A NULL
+    ``h`` (a null value) parks in register -1 with a NULL rho, so a
+    caller that keeps nulls counts them there while max(rho) skips
+    them.  ``t`` is staged in its own projection: rho reads it four
+    times, and Catalyst leaves a non-cheap alias referenced more than
+    once un-inlined, so the trim runs once per row."""
+    parts = df.select(
+        *keep,
+        F.when(F.col("h").isNull(), F.lit(-1))
+        .otherwise(F.conv(F.substring("h", 1, 2), 16, 10).cast("int"))
+        .alias("j"),
+        F.substring("h", 3, 15).alias("tail"),
+    ).withColumn("t", F.expr(HLL_TAIL_TRIM_EXPR))
+    return parts.select(*keep, "j", F.expr(HLL_RHO_FROM_T_SQL).alias("rho"))
+
+
+def hll_term() -> Column:
+    """One present register's share of the estimator's sum S:
+    2^(62 - R) as an exact DECIMAL(38,0) (1 <= R <= 61, so the shifted
+    BIGINT never overflows)."""
+    return F.expr("CAST(shiftleft(CAST(1 AS BIGINT), 62 - R) AS DECIMAL(38,0))")
+
+
+def hll_estimate_from_sums(df: DataFrame, name: str, *keep: str) -> DataFrame:
+    """(*keep, <name>, zero_registers) from ``df``'s S_present (the sum
+    of `hll_term` over the present registers, NULL when none is) and
+    n_present (their count), in scaled integer arithmetic: exact alpha
+    fraction, shifted-BIGINT power terms, one DECIMAL(38,0) integral
+    divide, so two engines' estimates are hash-equal.  Absent
+    registers need no grid fill: each contributes exactly 2^62 to S
+    and one zero register, recoverable from n_present.  The
+    small-range linear-counting correction m*ln(m/V) applies when the
+    raw estimate <= 2.5m and V > 0 (Flajolet §4), via the precomputed
+    integer table."""
+    raw = df.select(
+        *keep,
+        F.expr(
+            f"CAST(CAST('{HLL_NUM}' AS DECIMAL(38,0))"
+            f" div (CAST({HLL_DEN} AS DECIMAL(38,0))"
+            f" * (coalesce(S_present, CAST(0 AS DECIMAL(38,0)))"
+            f" + CAST(({HLL_M} - n_present) AS DECIMAL(38,0))"
+            f" * CAST(shiftleft(CAST(1 AS BIGINT), 62) AS DECIMAL(38,0))))"
+            f" AS BIGINT)"
+        ).alias("raw_est"),
+        F.expr(f"CAST({HLL_M} - n_present AS BIGINT)").alias("zero_registers"),
+    )
+    return raw.select(
+        *keep,
+        F.expr(hll_est_sql("raw_est", "zero_registers", "div")).alias(name),
+        "zero_registers",
+    )
 
 
 def hll_portable_registers(
@@ -189,12 +247,7 @@ def hll_portable_registers(
         F.col(grp_col).alias("grp"),
         F.md5(F.col(key_col).cast("string")).alias("h"),
     )
-    parts = hashed.select(
-        "grp",
-        F.conv(F.substring("h", 1, 2), 16, 10).cast("int").alias("j"),
-        F.substring("h", 3, 15).alias("tail"),
-    ).withColumn("t", F.expr(HLL_TAIL_TRIM_EXPR))
-    rho = F.expr(HLL_RHO_FROM_T_SQL)
+    parts = hll_index_rho(hashed, "grp")
     if all_label is not None and not df.isStreaming:
         # TWO-LEVEL merged sketch (r11, batch only): aggregate
         # per-group registers first, then explode the (groups x 256)-
@@ -208,11 +261,7 @@ def hll_portable_registers(
         # are not supported in update mode, and one streaming
         # aggregate with the row-level label explode IS the twin's
         # contract (fixed (groups+1) x 256 state).
-        per_grp = (
-            parts.select("grp", "j", rho.alias("rho"))
-            .groupBy("grp", "j")
-            .agg(F.max("rho").alias("R"))
-        )
+        per_grp = parts.groupBy("grp", "j").agg(F.max("rho").alias("R"))
         labeled = per_grp.select(
             F.explode(F.array(F.col("grp"), F.lit(all_label))).alias("grp"),
             "j",
@@ -225,44 +274,20 @@ def hll_portable_registers(
         else F.col("grp")
     )
     return (
-        parts.select(grp_out.alias("grp"), "j", rho.alias("rho"))
+        parts.select(grp_out.alias("grp"), "j", "rho")
         .groupBy("grp", "j")
         .agg(F.max("rho").alias("R"))
     )
 
 
 def hll_estimate_from_registers(regs: DataFrame) -> DataFrame:
-    """(grp, hll_est, zero_registers) from a (grp, j, R) register set,
-    in scaled integer arithmetic (exact alpha fraction, shifted-BIGINT
-    power terms, one DECIMAL(38,0) integral divide) so two engines'
-    estimates are hash-equal.  Absent registers need no grid fill:
-    each contributes exactly 2^62 to S and one zero register,
-    recoverable from n_present (present registers have R >= 1).
-    The small-range linear-counting correction m*ln(m/V) applies when
-    the raw estimate <= 2.5m and V > 0 (Flajolet §4), via the
-    precomputed integer table — hash-exact in both engines."""
+    """(grp, hll_est, zero_registers) from a (grp, j, R) register set
+    (present registers only: R >= 1) — see `hll_estimate_from_sums`."""
     est = regs.groupBy("grp").agg(
-        F.sum(
-            F.expr("CAST(shiftleft(CAST(1 AS BIGINT), 62 - R) AS DECIMAL(38,0))")
-        ).alias("S_present"),
+        F.sum(hll_term()).alias("S_present"),
         F.count(F.lit(1)).alias("n_present"),
     )
-    raw = est.select(
-        "grp",
-        F.expr(
-            f"CAST(CAST('{HLL_NUM}' AS DECIMAL(38,0))"
-            f" div (CAST({HLL_DEN} AS DECIMAL(38,0))"
-            f" * (S_present + CAST(({HLL_M} - n_present) AS DECIMAL(38,0))"
-            f" * CAST(shiftleft(CAST(1 AS BIGINT), 62) AS DECIMAL(38,0))))"
-            f" AS BIGINT)"
-        ).alias("raw_est"),
-        F.expr(f"CAST({HLL_M} - n_present AS BIGINT)").alias("zero_registers"),
-    )
-    return raw.select(
-        "grp",
-        F.expr(hll_est_sql("raw_est", "zero_registers", "div")).alias("hll_est"),
-        "zero_registers",
-    )
+    return hll_estimate_from_sums(est, "hll_est", "grp")
 
 
 # ---------------------------------------------------------------------------

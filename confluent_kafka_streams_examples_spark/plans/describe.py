@@ -40,8 +40,3 @@ def assert_broadcast_join(df: DataFrame, expect: int = 1) -> None:
     plan = explain_str(df)
     n = plan.count("BroadcastHashJoin") + plan.count("BroadcastNestedLoopJoin")
     assert n >= expect, f"expected >= {expect} broadcast joins:\n{plan}"
-
-
-def assert_no_cartesian(df: DataFrame) -> None:
-    plan = explain_str(df)
-    assert "CartesianProduct" not in plan, f"cartesian product in plan:\n{plan}"

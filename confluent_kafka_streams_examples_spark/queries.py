@@ -719,17 +719,18 @@ _VERIFY_FIRST = [
     "bpe_merge_rounds", "events_profile_extended", "lm_unigram_score",
     "similarity_ann_lsh", "dedup_embedding_cosine", "ann_recall_eval",
     "similarity_ivf_probe", "embedding_kmeans_fixed",
+    "sketch_hll_distinct", "sketch_hll_eval", "sketch_heavy_hitters",
     # Tail: oldest green first.
     "hybrid_search", "corpus_chunk_documents", "dedup_simhash64",
-    "sketch_hll_distinct", "topk_per_key", "event_gaps",
-    "stream_stream_outer_join", "ktable_latest", "text_stats",
-    "large_volume_orders", "similarity_topk", "pack_sequences",
+    "topk_per_key", "event_gaps", "stream_stream_outer_join",
+    "ktable_latest", "text_stats", "large_volume_orders",
     # Past the 50-entry window from here: these stay green on
     # unchanged bodies and lead the next round's rotation.
-    "similarity_topk_batch", "sketch_hll_eval", "events_json_analytics",
-    "user_retention_cohorts", "stream_stream_window_join",
-    "ktable_filter_extract", "corpus_shard_export", "dedup_simhash",
-    "dedup_cdc_chunks", "rollup_pricing", "market_share", "lang_profile",
+    "similarity_topk", "pack_sequences", "similarity_topk_batch",
+    "events_json_analytics", "user_retention_cohorts",
+    "stream_stream_window_join", "ktable_filter_extract",
+    "corpus_shard_export", "dedup_simhash", "dedup_cdc_chunks",
+    "rollup_pricing", "market_share", "lang_profile",
     "cube_order_priority", "basic_pipeline", "product_type_profit",
     "lang_id_heuristic", "setops_users", "windowed_session",
     "stream_table_join", "forecast_revenue_change", "important_part_value",
@@ -743,22 +744,22 @@ _VERIFY_FIRST = [
     "doc_fingerprint_dups", "bucketed_revenue_by_priority",
     "distinct_daily_users", "windowed_tumbling", "embedding_dim_stats",
     "quality_repetition_signals", "zorder_layout_stats",
-    "kafka_wire_roundtrip", "sketch_heavy_hitters", "value_percentiles",
-    "shipping_priority", "scd2_user_history", "boilerplate_chunks",
-    "embedding_centroids", "top_terms_per_source", "regional_revenue",
-    "duplicate_rate_by_source", "rolling_user_stats",
-    "merge_upsert_balances", "dedup_exact", "bm25_search",
-    "local_supplier_volume", "multimodal_features", "asof_join",
-    "sql_interface", "corpus_mixture_drift", "pivot_event_counts",
-    "vocab_coverage", "user_sessions", "primary_supplier_per_part",
-    "corpus_split_assignment", "sample_n_per_group", "agg_running_total",
-    "windowed_hopping", "late_ship_priority", "corpus_stratified_sample",
-    "anti_join_users", "skewed_event_rollup", "dedup_exact_normalized",
-    "json_props_extract", "funnel_conversion", "nation_pair_volume",
-    "semi_join_parts", "events_concurrent_degree_salted",
-    "embedding_quantize", "agg_pricing_summary", "user_running_value",
-    "returned_item_customers", "pii_scrub", "stream_stream_left_join",
-    "events_concurrent_degree", "quality_histogram_threshold",
+    "kafka_wire_roundtrip", "value_percentiles", "shipping_priority",
+    "scd2_user_history", "boilerplate_chunks", "embedding_centroids",
+    "top_terms_per_source", "regional_revenue", "duplicate_rate_by_source",
+    "rolling_user_stats", "merge_upsert_balances", "dedup_exact",
+    "bm25_search", "local_supplier_volume", "multimodal_features",
+    "asof_join", "sql_interface", "corpus_mixture_drift",
+    "pivot_event_counts", "vocab_coverage", "user_sessions",
+    "primary_supplier_per_part", "corpus_split_assignment",
+    "sample_n_per_group", "agg_running_total", "windowed_hopping",
+    "late_ship_priority", "corpus_stratified_sample", "anti_join_users",
+    "skewed_event_rollup", "dedup_exact_normalized", "json_props_extract",
+    "funnel_conversion", "nation_pair_volume", "semi_join_parts",
+    "events_concurrent_degree_salted", "embedding_quantize",
+    "agg_pricing_summary", "user_running_value", "returned_item_customers",
+    "pii_scrub", "stream_stream_left_join", "events_concurrent_degree",
+    "quality_histogram_threshold",
 ]
 
 

@@ -1881,8 +1881,10 @@ def zorder_layout_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CMS_ROWS = 4
-_CMS_WIDTH = 256
+from confluent_kafka_streams_examples_spark.operators.sketches import (
+    CMS_ROWS as _CMS_ROWS,
+    CMS_WIDTH as _CMS_WIDTH,
+)
 
 
 def _cms_bucket_sql(row: str, key: str) -> str:
@@ -1980,15 +1982,16 @@ def sketch_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # mergeable across groups/days/executors)
 # =====================================================================
 
+# the underscored spec names spell the DuckDB oracle SQL only; the
+# Spark side composes the operators
 from confluent_kafka_streams_examples_spark.operators.sketches import (
     HLL_DEN as _HLL_DEN,
     HLL_M as _HLL_M,
     HLL_NUM as _HLL_NUM,
-    HLL_RHO_FROM_T_SQL as _HLL_RHO_FROM_T_SQL,
     HLL_RHO_SQL as _HLL_RHO_SQL,
-    HLL_TAIL_TRIM_EXPR as _HLL_TAIL_TRIM_EXPR,
     hll_est_sql as _hll_est_sql,
     hll_estimate_from_registers,
+    hll_index_rho,
     hll_portable_registers,
 )
 
@@ -2095,17 +2098,6 @@ def sketch_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed = stacked.select(
         "rf", "col_name", F.md5(F.col("key")).alias("h")
     )
-    parts = hashed.select(
-        "rf",
-        "col_name",
-        F.conv(F.substring("h", 1, 2), 16, 10).cast("int").alias("j"),
-        F.substring("h", 3, 15).alias("tail"),
-    ).withColumn("t", F.expr(_HLL_TAIL_TRIM_EXPR))
-    # rho over the pre-trimmed tail: one ltrim instead of three
-    # regexp_extract per row — register-identical (sketches.py), -11%
-    # measured on this query's build at sf0.1, -40% at x20
-    # (OPTIMIZATION_r11.md)
-    rho = F.expr(_HLL_RHO_FROM_T_SQL)
     # TWO-LEVEL register aggregation (r11): collapse to fine-grained
     # (col, flag, j) registers FIRST — the label fan-out then explodes
     # a few-thousand-row aggregate instead of doubling every corpus
@@ -2114,7 +2106,7 @@ def sketch_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf0.1 (exchange volume is bounded either way), -13% at x20
     # where the agg updates dominate — the 100 TB regime.
     fine = (
-        parts.select("col_name", "rf", "j", rho.alias("rho"))
+        hll_index_rho(hashed, "rf", "col_name")
         .groupBy("col_name", "rf", "j")
         .agg(F.max("rho").alias("R1"))
     )

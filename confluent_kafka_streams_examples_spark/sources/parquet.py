@@ -8,8 +8,6 @@ physical plan stays narrow.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -22,10 +20,6 @@ def parquet_source(
     if columns:
         df = df.select(*columns)
     return df
-
-
-def table_path(sf_dir: str, name: str) -> str:
-    return os.path.join(sf_dir, f"{name}.parquet")
 
 
 def write_sized(

@@ -247,7 +247,9 @@ def test_hll_register_spec_matches_python_reference(spark):
     """Pin the portable-HLL bit spec against a THIRD implementation:
     pure-Python md5 + leading-zero-bit count.  Spark and the DuckDB
     oracle share the SQL formulation, so agreement between them can't
-    catch a shared mistake in the nibble arithmetic — this can."""
+    catch a shared mistake in the nibble arithmetic — this can.  Both
+    Spark register builds are pinned: the sketch's and the profiler's,
+    whose register -1 must carry exactly the null count."""
     import hashlib
 
     def py_register(key: str) -> tuple:
@@ -275,6 +277,21 @@ def test_hll_register_spec_matches_python_reference(spark):
         ).collect()
     }
     assert got == expect
+
+    from confluent_kafka_streams_examples_spark.operators.profile import (
+        profile_registers,
+    )
+
+    n_null = 7
+    with_nulls = spark.createDataFrame(
+        [(k,) for k in keys] + [(None,)] * n_null, "k string"
+    )
+    prof = {
+        r["j"]: (r["cnt"], r["R"])
+        for r in profile_registers(with_nulls, {"k": F.col("k")}).collect()
+    }
+    assert {j: R for j, (_, R) in prof.items() if j >= 0} == expect
+    assert prof[-1] == (n_null, None)
 
 
 def test_cms_cell_spec_matches_python_reference(spark):
